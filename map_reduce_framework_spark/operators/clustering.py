@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.vector import as_double, dot
-from ..session import stage_checkpoint
+from ..session import shuffle_partitions, stage_checkpoint
 
 K = 8
 ITERS = 2
@@ -100,12 +100,7 @@ def kmeans_lloyd(
 ) -> DataFrame:
     """``iters`` Lloyd rounds from deterministic seeds (vec_id < k), then
     a final assignment pass. Returns (vec_id, cluster, dist)."""
-    try:
-        n_parts = int(
-            embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except Exception:
-        n_parts = 32
+    n_parts = shuffle_partitions(embeddings)
     vectors = _quantized(embeddings, n_parts)
     cents = vectors.filter(F.col("vec_id") < k).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("cv")
@@ -215,12 +210,7 @@ def pq_codes(embeddings: DataFrame) -> DataFrame:
     exploded subvector relation, window-argmin per (vec_id, subspace),
     regroup to one codes array per vector -- two narrow shuffles keyed by
     vec_id, linear in |V|, nothing pairwise."""
-    try:
-        n_parts = int(
-            embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except Exception:
-        n_parts = 32
+    n_parts = shuffle_partitions(embeddings)
     vectors = embeddings.repartition(n_parts).select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
@@ -269,12 +259,7 @@ def pq_adc_topk(
     At scale the per-(query, subspace, codeword) distance table is
     n_queries * M_SUB * K_CODES rows -- broadcast it against the codes
     relation; the scan is linear in |codes| and touches no raw vectors."""
-    try:
-        n_parts = int(
-            embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except Exception:
-        n_parts = 32
+    n_parts = shuffle_partitions(embeddings)
     vectors = embeddings.repartition(n_parts).select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
@@ -376,12 +361,7 @@ def pq_codes_trained(embeddings: DataFrame, iters: int = 1) -> DataFrame:
     non-increasing vs the untrained codebook (pinned in tests). Input
     vectors are fixed-point quantized so the trained centroids are
     bit-identical cross-engine."""
-    try:
-        n_parts = int(
-            embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except Exception:
-        n_parts = 32
+    n_parts = shuffle_partitions(embeddings)
     vectors = _quantized(embeddings, n_parts)
     subs = _subvectors(vectors)
     cb = subs.filter(F.col("vec_id") < K_CODES).select(
@@ -502,12 +482,7 @@ def ann_ivf_trained(
     that holds up; what this variant contributes NOW is the full
     trained-coarse-quantizer pipeline with exact-arithmetic training
     that the oracle can unroll and hash-check end to end."""
-    try:
-        n_parts = int(
-            embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except Exception:
-        n_parts = 32
+    n_parts = shuffle_partitions(embeddings)
     vectors = _quantized(embeddings, n_parts)
     cents = vectors.filter(F.col("vec_id") < K).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("cv")
@@ -585,12 +560,7 @@ def ann_ivf_pq(
     LUT, probe list); the only large relation is the codes table,
     scanned once. Recall < pq_adc_topk's (probing misses cells) which is
     itself < exact -- the recall ladder is pinned in tests."""
-    try:
-        n_parts = int(
-            embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except Exception:
-        n_parts = 32
+    n_parts = shuffle_partitions(embeddings)
     vectors = embeddings.repartition(n_parts).select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
@@ -689,12 +659,7 @@ def ann_ivfadc(
     table, scanned once and pre-filtered to probed cells. Codebook
     convention matches the repo's deterministic choice: codewords are
     the residual subvectors of the first K_CODES vectors."""
-    try:
-        n_parts = int(
-            embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except Exception:
-        n_parts = 32
+    n_parts = shuffle_partitions(embeddings)
     d = DIM // M_SUB
     vectors = embeddings.repartition(n_parts).select(
         "vec_id", as_double(F.col("embedding")).alias("v")
@@ -1300,12 +1265,7 @@ def semdedup(
     Returns (vec_id, cluster, cdist, is_dup) for EVERY vector;
     survivors = filter(~is_dup)."""
     a = kmeans_lloyd(embeddings, k=k)
-    try:
-        n_parts = int(
-            embeddings.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except Exception:
-        n_parts = 32
+    n_parts = shuffle_partitions(embeddings)
     raw = embeddings.repartition(n_parts).select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )

@@ -38,6 +38,8 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from ..session import shuffle_partitions
+
 OK = "OK"
 ERR_NO_KEY = "ErrNoKey"
 ERR_VERSION = "ErrVersion"
@@ -73,10 +75,7 @@ def kv_ops_from_events(events: DataFrame) -> DataFrame:
     # from collapsing the tiny shuffle to 1 task -- the fold's cost is
     # per-GROUP Python overhead, which AQE cannot see (measured 7.3 s ->
     # 1.2 s at sf0.1 when the fold ran at 1 vs 32 tasks).
-    try:
-        n = int(events.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n = 32
+    n = shuffle_partitions(events)
     puts = base.filter(F.col("op") == "put").repartition(n, "key").withColumn(
         "pseq", F.row_number().over(Window.partitionBy("key").orderBy("op_id"))
     )
@@ -139,10 +138,7 @@ def kv_fold(ops: DataFrame) -> DataFrame:
     AQE cannot see: measured 7.3 s -> 1.2 s at sf0.1 (1500 keys folded in
     1 task vs 32). groupBy reuses this hash partitioning, so it is still
     a single shuffle."""
-    try:
-        n = int(ops.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n = 32
+    n = shuffle_partitions(ops)
     return (
         ops.repartition(n, "key")
         .groupBy("key")
@@ -206,10 +202,7 @@ def kv_fold_segmented(ops: DataFrame, segment_size: int = 64) -> DataFrame:
     each round is one cogroup shuffle of (state ~ |keys| rows) against
     (segment ~ |keys| * segment_size rows). Parallelism stays per-key in
     every round; memory per task is O(segment_size)."""
-    try:
-        n = int(ops.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        n = 32
+    n = shuffle_partitions(ops)
     # key-pinned shuffle width, same rationale as kv_fold: the per-round
     # cost is per-GROUP Python overhead, which AQE's byte-based coalescing
     # cannot see -- without the pin the tiny cogroup shuffles collapse to

@@ -2302,7 +2302,7 @@ def multimodal_dedup_agreement(documents: DataFrame) -> DataFrame:
     each contribute unique recall. Each pair relation is its
     registered banded plan unchanged, computed ONCE (stage-
     checkpointed) and reused across its three matrix cells."""
-    from ..session import stage_checkpoint
+    from ..session import materialize_parallel
     from .audio import audio_fingerprint_pairs
     from .dedup import minhash_lsh_pairs
 
@@ -2312,26 +2312,12 @@ def multimodal_dedup_agreement(documents: DataFrame) -> DataFrame:
         ("video_keyframes", video_dedup_pairs(documents)),
         ("audio_fingerprint", audio_fingerprint_pairs(documents)),
     ]
-    # the four detector materializations are independent jobs that each
-    # leave most of the cluster idle -- overlap them from a small
-    # driver thread pool (guide §2.6); each relation is deterministic,
-    # so scheduling order cannot change a row (r13; same pattern as
-    # ann_recall_report, measured there 12.9 -> 8.4 s)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = [
-            (
-                name,
-                pool.submit(
-                    stage_checkpoint,
-                    df.select("doc_a", "doc_b"),
-                    eager=True,
-                ),
-            )
-            for name, df in methods
-        ]
-        rels = [(name, f.result()) for name, f in futs]
+    # the four detector materializations are independent jobs, so they
+    # run concurrently
+    pairs = materialize_parallel(
+        [lambda df=df: df.select("doc_a", "doc_b") for _, df in methods]
+    )
+    rels = [(name, p) for (name, _), p in zip(methods, pairs)]
     out = None
     for i in range(len(rels)):
         for j in range(i + 1, len(rels)):

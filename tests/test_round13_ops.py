@@ -30,7 +30,7 @@ class TestFlacMultiFrameShared:
 
         rng = np.random.default_rng(11)
         # > 4096 samples -> several frames; exercises the shared
-        # unpacked/rice_cache path of _decode_flac (ADVICE r13 #1)
+        # unpacked bit view of _decode_flac
         for n in (4097, 12_288, 40_000):
             clip = [int(v) for v in rng.integers(-3000, 3000, n)]
             for payload in (
@@ -264,11 +264,11 @@ class TestFanOutGate:
 
     def test_elides_exchange_for_wide_input(self, spark):
         from map_reduce_framework_spark.operators.text_analysis import (
-            _default_parallelism,
             _fan_out,
         )
+        from map_reduce_framework_spark.session import shuffle_partitions
 
-        target = _default_parallelism(spark.range(1))
+        target = shuffle_partitions(spark.range(1))
         df = spark.range(10_000).repartition(target * 2)
         out = _fan_out(df)
         assert out is df  # no extra exchange on top
