@@ -15,8 +15,10 @@ same semantics on Spark:
               step (mr/worker.go:78-81); which hash function routes a key
               is not semantically visible, so Spark's murmur3 replaces
               FNV-32a
-* group    -> ``groupBy(key).applyInPandas`` -- per-key grouped values
-              (mr/worker.go:128-137)
+* group    -> ``sortWithinPartitions(key)`` + one ``mapInPandas`` pass
+              per reduce partition that calls Reduce once per run of
+              equal keys -- the reference's sort-then-scan reduce
+              (main/mrsequential.go:61,70-86, mr/worker.go:128-137)
 * sink     -> sources.io.write_mr_text ("<key> <value>" lines, key-sorted
               per partition, atomic task commit)
 
@@ -28,8 +30,9 @@ built-in functions should not go through here.
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,6 +44,51 @@ ReduceFn = Callable[[str, list[str]], str]
 _KV_SCHEMA = StructType(
     [StructField("key", StringType()), StructField("value", StringType())]
 )
+
+
+#: Key of "no open run": unlike ``None``, it equals no key, so a run of
+#: ``None`` keys is one group like any other.
+_NO_RUN = object()
+
+
+def scan_key_runs(
+    batches: Iterator[pd.DataFrame],
+    key_col: str,
+    cols: Sequence[str],
+    reduce_run: Callable[[object, list[list]], Iterable[tuple]],
+    out_cols: Sequence[str],
+) -> Iterator[pd.DataFrame]:
+    """The reduce half of MapReduce over one partition sorted by
+    ``key_col``: one pass over the Arrow batches, calling
+    ``reduce_run(key, [values of each of cols])`` once per run of equal
+    keys and emitting the rows it returns.
+
+    A run may span batches; it stays open until a different key starts.
+    The runs a batch completes are emitted right after it, so memory
+    holds one batch plus the open run, never the whole partition."""
+    open_key, open_run = _NO_RUN, [[] for _ in cols]
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        keys = pdf[key_col].to_numpy()
+        values = [pdf[c].tolist() for c in cols]
+        starts = np.flatnonzero(keys[1:] != keys[:-1]) + 1
+        bounds = [0, *starts.tolist(), len(keys)]
+        out: list[tuple] = []
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            key = keys[lo]
+            if key != open_key:
+                if open_key is not _NO_RUN:
+                    out.extend(reduce_run(open_key, open_run))
+                open_key, open_run = key, [[] for _ in cols]
+            for run_col, batch_col in zip(open_run, values):
+                run_col.extend(batch_col[lo:hi])
+        if out:
+            yield pd.DataFrame.from_records(out, columns=out_cols)
+    if open_key is not _NO_RUN:
+        yield pd.DataFrame.from_records(
+            list(reduce_run(open_key, open_run)), columns=out_cols
+        )
 
 
 class MapReduceJob:
@@ -72,10 +120,12 @@ class MapReduceJob:
                         out_v.append(v)
                 yield pd.DataFrame({"key": out_k, "value": out_v})
 
-        def run_reduce(pdf: pd.DataFrame) -> pd.DataFrame:
-            key = pdf["key"].iloc[0]
-            return pd.DataFrame(
-                {"key": [key], "value": [reduce_fn(key, list(pdf["value"]))]}
+        def reduce_run(key, cols: list[list]) -> list[tuple]:
+            return [(key, reduce_fn(key, cols[0]))]
+
+        def run_reduce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            return scan_key_runs(
+                batches, "key", ["value"], reduce_run, ["key", "value"]
             )
 
         mapped = (
@@ -85,13 +135,14 @@ class MapReduceJob:
             )
             .mapInPandas(run_map, schema=_KV_SCHEMA)
         )
-        # NReduce hash partitioning (A3). groupBy alone would also shuffle,
-        # but an explicit repartition pins the reducer count like NReduce
-        # does instead of inheriting spark.sql.shuffle.partitions.
+        # NReduce hash partitioning (A3): the explicit repartition pins the
+        # reducer count like NReduce does instead of inheriting
+        # spark.sql.shuffle.partitions, and AQE does not coalesce it. The
+        # sort is partition-local, so this is the job's only shuffle.
         return (
             mapped.repartition(self.n_reduce, "key")
-            .groupBy("key")
-            .applyInPandas(run_reduce, schema=_KV_SCHEMA)
+            .sortWithinPartitions("key")
+            .mapInPandas(run_reduce, schema=_KV_SCHEMA)
         )
 
 

@@ -13,9 +13,11 @@ Batch-relational reproduction (the driver has no RPC network):
 * ``kv_ops_from_events`` derives a deterministic operation log from the
   driver's events table (FIXTURES.md §2 -- op_id gives the total order).
 * ``kv_fold`` replays the log per key and emits each op's outcome.
-  Keys are independent, so the fold distributes perfectly: one
-  applyInPandas group per key, sequential only *within* a key -- the
-  same parallelism an actual sharded KV store would have at 100 TB.
+  Keys are independent, so the fold distributes perfectly: the log is
+  hash-partitioned and sorted by (key, op_id), and one ``mapInPandas``
+  pass per partition folds each run of equal keys in turn -- sequential
+  only *within* a key, the same parallelism an actual sharded KV store
+  would have at 100 TB.
   The DuckDB oracle replays the identical log with a recursive CTE.
 
 ``KVStore`` / ``SpinLock`` give the in-process API parity (clerk
@@ -39,6 +41,7 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from ..session import shuffle_partitions
+from .compat import scan_key_runs
 
 OK = "OK"
 ERR_NO_KEY = "ErrNoKey"
@@ -69,12 +72,8 @@ def kv_ops_from_events(events: DataFrame) -> DataFrame:
         .otherwise(F.concat(F.lit("v"), F.col("event_id").cast("string")))
         .alias("value"),
     )
-    # User-pinned shuffle width: the pseq window and the downstream Python
-    # fold both need hash(key) partitioning; pinning the ONE shuffle here
-    # keeps it a single exchange AND stops AQE's byte-based coalescing
-    # from collapsing the tiny shuffle to 1 task -- the fold's cost is
-    # per-GROUP Python overhead, which AQE cannot see (measured 7.3 s ->
-    # 1.2 s at sf0.1 when the fold ran at 1 vs 32 tasks).
+    # User-pinned shuffle width for the pseq window: AQE's byte-based
+    # coalescing would otherwise collapse this tiny shuffle to 1 task.
     n = shuffle_partitions(events)
     puts = base.filter(F.col("op") == "put").repartition(n, "key").withColumn(
         "pseq", F.row_number().over(Window.partitionBy("key").orderBy("op_id"))
@@ -107,42 +106,52 @@ _FOLD_SCHEMA = StructType(
 )
 
 
-def _fold_one_key(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("op_id")
+_FOLD_COLS = ["op_id", "op", "value", "version_arg"]
+
+
+def _fold_run(key, cols: list[list]) -> list[tuple]:
+    """Replay one key's ops, given in op_id order as _FOLD_COLS lists."""
     cur_value, cur_version = None, 0
     out = []
-    for r in pdf.itertuples(index=False):
-        if r.op == "get":
+    for op_id, op, value, version_arg in zip(*cols):
+        if op == "get":
             if cur_version == 0:
-                out.append((r.op_id, r.key, "get", ERR_NO_KEY, None, 0))
+                out.append((op_id, key, "get", ERR_NO_KEY, None, 0))
             else:
-                out.append((r.op_id, r.key, "get", OK, cur_value, cur_version))
+                out.append((op_id, key, "get", OK, cur_value, cur_version))
         else:
-            if r.version_arg == cur_version:
-                cur_value, cur_version = r.value, cur_version + 1
-                out.append((r.op_id, r.key, "put", OK, cur_value, cur_version))
+            if version_arg == cur_version:
+                cur_value, cur_version = value, cur_version + 1
+                out.append((op_id, key, "put", OK, cur_value, cur_version))
             else:
                 err = ERR_NO_KEY if cur_version == 0 else ERR_VERSION
-                out.append((r.op_id, r.key, "put", err, None, cur_version))
-    return pd.DataFrame(out, columns=[f.name for f in _FOLD_SCHEMA.fields])
+                out.append((op_id, key, "put", err, None, cur_version))
+    return out
+
+
+def _fold_partition(batches):
+    return scan_key_runs(
+        batches, "key", _FOLD_COLS, _fold_run, _FOLD_SCHEMA.fieldNames()
+    )
 
 
 def kv_fold(ops: DataFrame) -> DataFrame:
-    """Replay the op log per key: one Arrow-batched group per key, keys in
-    parallel. Returns one outcome row per op.
+    """Replay the op log per key, keys in parallel. Returns one outcome
+    row per op.
 
-    The explicit ``repartition(n, key)`` pins the shuffle width feeding
-    the Python stage. Without it AQE's byte-based coalescing sees a tiny
-    shuffle (a few MB) and collapses it to ONE partition -- correct for
-    JVM operators, but the cost here is per-GROUP Python overhead, which
-    AQE cannot see: measured 7.3 s -> 1.2 s at sf0.1 (1500 keys folded in
-    1 task vs 32). groupBy reuses this hash partitioning, so it is still
-    a single shuffle."""
+    One shuffle, ``repartition(n, key)``, then a partition-local sort by
+    (key, op_id) and one ``mapInPandas`` pass per partition that folds
+    each run of equal keys (``compat.scan_key_runs``) -- the reference's
+    sort-then-scan reduce, so the Python cost is per batch, not per key.
+    The repartition is explicit because AQE coalesces only the shuffles
+    it plans itself: left to size the few-MB shuffle by bytes, it would
+    fold every key in ONE task."""
     n = shuffle_partitions(ops)
     return (
         ops.repartition(n, "key")
-        .groupBy("key")
-        .applyInPandas(_fold_one_key, schema=_FOLD_SCHEMA)
+        .sortWithinPartitions("key", "op_id")
+        .select("key", *_FOLD_COLS)
+        .mapInPandas(_fold_partition, schema=_FOLD_SCHEMA)
     )
 
 

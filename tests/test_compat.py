@@ -126,3 +126,60 @@ def test_text_sink_roundtrip(spark, sf_smoke, doc_inputs, tmp_path):
     )
     want = sorted(f"{r['key']} {r['value']}" for r in out.collect())
     assert lines == want
+
+
+# -- the reduce's run scan: sort by key, one pass per reduce partition ----
+
+
+def test_runs_straddling_arrow_batches_reduce_once(spark, sf_smoke):
+    """With two records per Arrow batch nearly every key's values span
+    several batches; the open run must be carried across the batch
+    boundary, so each key is reduced exactly once with all its values."""
+    docs = load_table(spark, sf_smoke, "documents").filter(F.col("doc_id") < 50)
+    inputs = docs.select(
+        F.col("doc_id").cast("string").alias("name"), F.col("text").alias("contents")
+    )
+    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf_key, None)
+    spark.conf.set(conf_key, "2")
+    try:
+        job = compat.MapReduceJob(compat.wc_map, compat.wc_reduce, n_reduce=4)
+        rows = job.run(inputs).collect()
+    finally:
+        if old is None:
+            spark.conf.unset(conf_key)
+        else:
+            spark.conf.set(conf_key, old)
+    keys = [r[0] for r in rows]
+    assert len(keys) == len(set(keys))
+    want = {r["word"]: str(r["cnt"]) for r in apps.word_count(docs).collect()}
+    assert max(int(v) for v in want.values()) > 2
+    assert {r[0]: r[1] for r in rows} == want
+
+
+def test_none_keys_form_one_group(spark, doc_inputs):
+    """A None key is a key like any other: all its values reach one
+    reduce call, and its run does not merge with a neighbouring one."""
+    n_docs = doc_inputs.count()
+
+    def map_fn(name, contents):
+        return [(None, "1"), (None, "1"), ("a", "1")]
+
+    job = compat.MapReduceJob(map_fn, compat.wc_reduce, n_reduce=3)
+    rows = job.run(doc_inputs).collect()
+    assert sorted(rows, key=lambda r: r[0] is None) == [
+        ("a", str(n_docs)),
+        (None, str(2 * n_docs)),
+    ]
+
+
+def test_more_reducers_than_keys(spark, sf_smoke, doc_inputs):
+    """n_reduce above the number of distinct keys leaves reduce
+    partitions empty; they emit nothing and the rest stay correct."""
+    job = compat.MapReduceJob(
+        compat.crash_payload_map, compat.crash_payload_reduce, n_reduce=16
+    )
+    got = _as_dict(job.run(doc_inputs))
+    native = apps.crash_payload(load_table(spark, sf_smoke, "documents"))
+    assert got == {r["key"]: r["joined"] for r in native.collect()}
+    assert len(got) == 4

@@ -1,7 +1,7 @@
 """Property-based differential test for the versioned-KV fold (the
 porcupine-linearizability analog of SURVEY.md §5.1.6, adapted to the
 deterministic batch setting): for ANY op log, the distributed
-groupBy-applyInPandas fold must agree with the sequential in-process
+sort-then-scan fold must agree with the sequential in-process
 KVStore model (which implements srv/server.go:39-88 semantics directly)."""
 
 from __future__ import annotations

@@ -20,13 +20,16 @@ from map_reduce_framework_spark import registry
 SF = "/root/testdata/sf0.001"
 
 
-def _formatted_plan(spark, name: str) -> str:
-    df = registry.REGISTRY[name].fn(spark, SF)
+def _explain(spark, df) -> str:
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
     )
+
+
+def _formatted_plan(spark, name: str) -> str:
+    return _explain(spark, registry.REGISTRY[name].fn(spark, SF))
 
 
 @pytest.mark.parametrize(
@@ -130,14 +133,47 @@ def test_partitioned_source_prunes_partitions(spark, tmp_path):
 
 @pytest.mark.parametrize("name", ["kv_fold", "kv_final_state"])
 def test_python_fold_stage_parallelism_is_pinned(spark, name):
-    """The shuffle feeding the per-key Python fold must be a USER-pinned
+    """The shuffle feeding the Python fold must be a USER-pinned
     repartition (REPARTITION_BY_NUM). With only ENSURE_REQUIREMENTS
     exchanges, AQE's byte-based coalescing collapses the small shuffle to
-    one task and serializes every Pandas group through it (measured
-    7.3 s -> 1.2 s at sf0.1) -- AQE sizes by bytes and cannot see
-    per-group Python cost."""
+    one task and folds every key in it; the pin keeps the fold running
+    in parallel, one task per reduce partition."""
     plan = _formatted_plan(spark, name)
     assert "REPARTITION_BY_NUM" in plan, plan
+
+
+def _exchanges(plan: str) -> int:
+    return len(re.findall(r"\(\d+\) Exchange\b", plan))
+
+
+@pytest.mark.parametrize("name", ["MapReduceJob", "kv_fold"])
+def test_reduce_is_one_sort_and_run_scan(spark, name):
+    """The reduce runs as the reference's sort-then-scan: one user-pinned
+    hash shuffle, a partition-local sort and one MapInPandas pass per
+    partition. The sort must add no shuffle, and the per-key
+    FlatMapGroupsInPandas stage must not come back. kv_fold's op log
+    brings one shuffle of its own (the pseq window), so the fold is
+    checked as what it adds on top of that log."""
+    from pyspark.sql import functions as F
+
+    from map_reduce_framework_spark.operators import compat, kv
+    from map_reduce_framework_spark.sources.io import load_table
+
+    if name == "MapReduceJob":
+        docs = load_table(spark, SF, "documents").select(
+            F.col("doc_id").cast("string").alias("name"),
+            F.col("text").alias("contents"),
+        )
+        job = compat.MapReduceJob(compat.wc_map, compat.wc_reduce, n_reduce=4)
+        plan, base = _explain(spark, job.run(docs)), 0
+    else:
+        plan = _formatted_plan(spark, name)
+        ops = kv.kv_ops_from_events(load_table(spark, SF, "events"))
+        base = _exchanges(_explain(spark, ops))
+    assert _exchanges(plan) == base + 1, plan
+    assert plan.count("REPARTITION_BY_NUM") == _exchanges(plan), plan
+    assert "MapInPandas" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
 
 
 def test_interval_overlap_join_is_binned_equi(spark):
