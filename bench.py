@@ -58,25 +58,9 @@ def main() -> None:
     except ValueError:
         sf = -1.0
 
-    from pyspark.sql import SparkSession
+    from map_reduce_framework_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName("bench")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .getOrCreate()
-    )
+    spark = get_spark("bench", shuffle_partitions=int(cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
     from map_reduce_framework_spark import registry
@@ -297,16 +281,8 @@ def main() -> None:
 
 _ISOLATED_SNIPPET = """
 import json, sys, time
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.appName("bench-isolated")
-    .master("local[{cpus}]")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.shuffle.partitions", "{cpus}")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory", "{mem}")
-    .getOrCreate())
+from map_reduce_framework_spark.session import get_spark
+spark = get_spark("bench-isolated", shuffle_partitions={cpus})
 spark.sparkContext.setLogLevel("ERROR")
 from map_reduce_framework_spark import registry
 spark.range(1_000_000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
@@ -332,7 +308,6 @@ def _isolated_rerun(
             sf_dir=sf_dir,
             cpus=cpus,
             reps=reps,
-            mem=os.environ.get("SPARK_DRIVER_MEMORY", "16g"),
         )
         try:
             proc = subprocess.run(

@@ -1,19 +1,15 @@
-"""Measure wide-DIM langid trainer cost vs DIM (VERDICT r9 ask #4's
-measurement leg) and the curation langid stage-parquet footprint
-(ask #7).
+"""Measure the curation langid stage-parquet footprint (VERDICT r9
+ask #7).
 
-Part 1 -- trainer wall vs DIM: per-iteration wall of the vector-shaped
-wide trainer (operators/langid_wide.py) at DIM in {16, 256, 1024,
-4096} on sf0.01, split into the one-time feature pass (Arrow md5 scan,
-DIM-independent except the counts array) and the per-iteration
-gradient pass (numpy int64 matmul + partial-sum collect, whose model
-traffic is |langs| x (DIM+1) ints per partition). The narrow JVM
-trainer at DIM=16 is measured alongside as the baseline.
+The composed curation run materializes the langid stage as the full
+scores relation. Write langid_scores to parquet at sf0.01 and sf0.1 and
+record bytes/doc -- confirming the stage parquet is doc_id-sized (5
+scalar columns), never feature-sized.
 
-Part 2 -- stage parquet size: the composed curation run materializes
-the langid stage as the full scores relation. Write langid_scores to
-parquet at sf0.01 and sf0.1 and record bytes/doc -- confirming the
-stage parquet is doc_id-sized (5 scalar columns), never feature-sized.
+The vector trainer's cost against DIM is measured by
+experiments/langid_union_scale.py (part 1). The "wide" rows in
+experiments/langid_dim_scale.json were measured by this script's earlier
+first part on the dense DIM+1 trainer, which the sparse trainer replaced.
 
 Usage: python experiments/langid_dim_scale.py
 Writes experiments/langid_dim_scale.json; SCALE.md quotes it.
@@ -26,7 +22,6 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -44,45 +39,10 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from map_reduce_framework_spark.operators import langid, langid_wide
+    from map_reduce_framework_spark.operators import langid
 
     sf01 = "/root/testdata/sf0.01"
-    docs = spark.read.parquet(f"{sf01}/documents.parquet")
-    n_docs = docs.count()
-
-    results: dict = {"sf": 0.01, "n_docs": n_docs, "iters": 3, "wide": []}
-
-    # Arrow/Python-worker warmup so the first measured feature pass
-    # doesn't carry daemon-fork + JIT cost (the bench.py discipline).
-    langid_wide.wide_features(docs, dim=8).count()
-
-    # narrow JVM trainer baseline (DIM=16, the registered configuration)
-    t0 = time.perf_counter()
-    langid.langid_train_trace(docs, iters=3)
-    results["narrow_dim16_3iters_sec"] = round(time.perf_counter() - t0, 3)
-
-    for dim in (16, 256, 1024, 4096):
-        t0 = time.perf_counter()
-        feats = langid_wide.wide_features(docs, dim=dim).persist()
-        feats.count()
-        feat_sec = time.perf_counter() - t0
-        feats.unpersist()
-        t0 = time.perf_counter()
-        rows, w = langid_wide.wide_train_trace(docs, iters=3, dim=dim)
-        total_sec = time.perf_counter() - t0
-        results["wide"].append(
-            {
-                "dim": dim,
-                "feature_pass_sec": round(feat_sec, 3),
-                "train_3iters_sec": round(total_sec, 3),
-                "per_iter_sec": round((total_sec - feat_sec) / 3, 3),
-                "trace_rows": len(rows),
-            }
-        )
-        print(results["wide"][-1], flush=True)
-
-    # Part 2: langid stage parquet footprint (scores relation) at two SFs
-    results["stage_parquet"] = []
+    results: dict = {"stage_parquet": []}
     for sf_dir, sf in ((sf01, 0.01), ("/root/testdata/sf0.1", 0.1)):
         d = spark.read.parquet(f"{sf_dir}/documents.parquet")
         scores = langid.langid_scores(d)

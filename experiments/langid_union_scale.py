@@ -7,9 +7,9 @@ Two measurements:
 1. Per-iteration wall vs DIM for the SPARSE union trainer
    (operators/langid_union.py) from 4096 to 1048576 buckets -- the
    sparse claim is that cost is nnz-bound, so the curve should be
-   FLAT where the dense trainer (langid_wide) was measured flat only
-   to 4096 and is memory-infeasible at 65536+ (a dense 65537-wide
-   int64 row is 0.5 MB/doc).
+   FLAT where a dense DIM+1 trainer (the engine's earlier wide path)
+   was measured flat only to 4096 and is memory-infeasible at 65536+
+   (a dense 65537-wide int64 row is 0.5 MB/doc).
 
 2. Accuracy x (feature config, DIM) on a CONFUSABLE-PAIR corpus: two
    languages built from the same word multiset in language-specific

@@ -26,20 +26,8 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SNIPPET = """
 import sys, json, time
 sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.appName("measure")
-    .master("local[{cpus}]")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.shuffle.partitions", "{cpus}")
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory", "16g")
-    .getOrCreate())
+from map_reduce_framework_spark.session import get_spark
+spark = get_spark("measure", shuffle_partitions={cpus})
 spark.sparkContext.setLogLevel("ERROR")
 from map_reduce_framework_spark import registry
 spark.range(1_000_000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
@@ -89,6 +77,7 @@ def main() -> None:
         proc = subprocess.run(
             [sys.executable, "-c", code], capture_output=True, text=True,
             timeout=900, cwd=REPO,
+            env={**os.environ, "SPARK_GRAFT_CPUS": str(args.cpus)},
         )
         sec = None
         for line in proc.stdout.splitlines():

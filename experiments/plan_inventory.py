@@ -80,8 +80,9 @@ EXECUTES_ON_BUILD = {
     "weight literals, ADVICE r8 #4) on build; cost in bench.py, "
     "correctness oracle-gated",
     # round-10
-    "langid_scores_wide": "trains the wide vector model (per-partition "
-    "partial-sum collects, bounded by model size) on build",
+    "langid_scores_wide": "trains the sparse vector model at DIM=256, "
+    "char-3 grams only (per-partition sparse partial-sum collects, "
+    "bounded by model support) on build",
 }
 # (queries with "stream" in the name are skipped generically below)
 

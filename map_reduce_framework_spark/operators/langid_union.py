@@ -1,40 +1,43 @@
-"""fastText-regime language-ID: word-n-gram + char-n-gram UNION
-features over a SPARSE vector pipeline at DIM=65536 (VERDICT r10 ask
-#6).
+"""Language ID over SPARSE hashed feature vectors: the one vector-shaped
+trainer behind ``langid_scores_wide`` (DIM=256, char-3 grams) and
+``langid_scores_wide_union`` (DIM=65536, char-3 + word-1 + word-2 grams).
 
-langid_wide.py proved the vector-shaped trainer flat in DIM to 4096 --
-but its feature relation is DENSE (one array<bigint> of length DIM+1
-per doc), which is the wrong shape from DIM~10^4 up: a 65537-wide
-dense row is half a megabyte of mostly zeros, and fastText's
-production regime (64k-2M buckets, word n-grams + char n-grams) has
-per-doc support of only a few thousand features. This module is the
-SPARSE re-expression:
+The narrow langid operators (operators/langid.py) materialize the
+features as DIM+1 named columns and train all classes in one scalar
+aggregate -- the right shape at DIM=16, where the DuckDB oracle replays
+the trajectory as unrolled CTEs, and the wrong one at fastText widths
+(64k-2M buckets), where a dense row is mostly zeros and per-doc support
+is only a few thousand features. This module re-expresses the SAME
+quantized trainer over support-sized vectors, so one path covers both
+the narrow and the wide dimensions:
 
 * features are TWO aligned arrays (idx array<bigint>, val
   array<bigint>) -- the nonzero buckets only. Char n-grams hash with
-  the EXACT narrow/wide bucket rule (md5('lid:'||gram)), so with
-  word_ngrams=() the union features equal langid_wide.wide_features
-  bucket-for-bucket -- the cross-implementation pin. Word n-grams
-  hash namespaced strings ('w1:tok', 'w2:tok tok'); all families
-  share one quantization: xq = floor((cnt/total)*1e6+0.5) over the
-  TOTAL feature count, bias _S at index dim.
+  the EXACT narrow bucket rule (md5('lid:'||gram)); word n-grams hash
+  namespaced strings ('w1:tok', 'w2:tok tok'); all families share one
+  quantization: xq = floor((cnt/total)*1e6+0.5) over the TOTAL feature
+  count, bias _S at index dim. With word_ngrams=() and dim=16 the
+  features are the narrow path's under a layout map (narrow: bias at
+  0, bucket b at b+1; here: bucket b at b, bias at dim), and the
+  trajectory equals the hash-exact JVM trainer's -- the
+  cross-implementation pin (tests/test_round10_ops.py::TestWideLangid).
 * each training iteration is one mapInPandas pass: per chunk the dot
   products are ONE np.add.reduceat over the flattened (idx, val)
   arrays and the gradient is ONE np.add.at scatter -- cost is
-  nnz-bound, independent of DIM (the sparse scale claim
-  experiments/langid_union_scale.json measures: per-iteration wall
-  FLAT from DIM=4096 to DIM=1048576). Exactness discipline is ADVICE
-  r10 #2's: per-term |(pq-y)*xq| <= 1e12, accumulation flushed every
-  _FLUSH_ROWS rows so int64 partials are provably < 4e18 < 2^63;
+  nnz-bound, independent of DIM (experiments/langid_union_scale.json:
+  per-iteration wall FLAT from DIM=4096 to DIM=1048576). Exactness:
+  per-term |(pq-y)*xq| <= 1e12, accumulation is flushed every
+  _FLUSH_ROWS rows so int64 partials are provably < 4e18 < 2^63 (the
+  trajectory is pinned invariant under tiny chunk and flush sizes);
   nonlinearities go through CPython libm row-at-a-time so the
-  quantized trajectory is reproducible bit-for-bit by the
-  independent pure-Python twin (tests/test_round11_ops.py pins it).
+  quantized trajectory is reproducible bit-for-bit by the independent
+  pure-Python twin (tests/test_round11_ops.py pins it, char-only and
+  union).
 
-Registered surface: ``langid_scores_wide_union`` (DIM=65536, char-3 +
-word-1 + word-2 features) -- rows-only by design, same argument as
-langid_scores_wide; correctness carried by the independent-Python pin
-plus the char-only DIM=16 equality to the dense trainer (itself
-pinned to the hash-exact narrow JVM trainer).
+Both registered surfaces are rows-only by design: the unrolled-CTE
+oracle at these widths would be megabytes of SQL; correctness is
+carried by the independent-Python pin plus the dim=16 equality to the
+hash-exact JVM trainer.
 
 Why the union matters (measured, experiments/langid_union_scale.json):
 on a confusable-pair corpus -- two languages built from the SAME word
@@ -62,18 +65,30 @@ from pyspark.sql.types import (
 )
 
 from .langid import LID_ITERS, LID_LANGS, LID_LR, LID_SEED, _S
-from .langid_wide import _FLUSH_ROWS, _MM_CHUNK, _nll_q, _pq_from_dot
 
 #: The registered fastText-regime configuration.
 UNION_DIM = 65536
 UNION_WORD_NGRAMS = (1, 2)
 
+#: ``langid_scores_wide``: char-3 grams only, 16x the oracle-exact
+#: DIM=16 narrow trainer.
+WIDE_DIM = 256
+
+#: Rows per flattened (idx, val) chunk of a training batch: bounds the
+#: size of the per-chunk numpy arrays, not the exactness argument.
+_MM_CHUNK = 65536
+
+#: Rows per emitted partial row-group: every LongType gradient value
+#: leaving the executor is < _FLUSH_ROWS * 1e12 = 4e18 < 2^63, so a
+#: partition of ANY size stays exact -- it just emits more groups.
+_FLUSH_ROWS = 4_000_000
+
 
 def _bucket(feat: str, dim: int) -> int:
     """The shared bucket rule (langid._lid_features verbatim): first
     15 hex chars of md5('lid:'||feat) as an integer, mod dim. Char
-    grams pass through RAW (identical buckets to the narrow/wide
-    paths); word n-grams arrive namespaced ('w{n}:...')."""
+    grams pass through RAW (identical buckets to the narrow path);
+    word n-grams arrive namespaced ('w{n}:...')."""
     return int(
         hashlib.md5(f"{LID_SEED}:{feat}".encode()).hexdigest()[:15], 16
     ) % dim
@@ -119,6 +134,20 @@ def _union_row(
                 idx.append(b)
                 val.append(q)
     return idx, val
+
+
+def _pq_from_dot(dot: int) -> int:
+    """Quantized sigmoid under integer weights -- the narrow trainer's
+    exact rule (z = dot/1e12 in double, pq = floor(1e6/(1+exp(-z)) +
+    0.5)), evaluated by CPython libm."""
+    z = float(dot) / 1.0e12
+    return math.floor(float(_S) / (1.0 + math.exp(-z)) + 0.5)
+
+
+def _nll_q(pq: int, is_y: bool) -> int:
+    """Quantized per-row NLL -- the narrow trainer's rule verbatim."""
+    pc = float(min(max(pq, 1), _S - 1)) / 1.0e6
+    return math.floor(-math.log(pc if is_y else 1.0 - pc) * 1.0e6 + 0.5)
 
 
 def union_features(
@@ -179,8 +208,9 @@ def union_train_trace(
     word_ngrams: tuple = UNION_WORD_NGRAMS,
 ) -> tuple[list, dict]:
     """The quantized one-vs-rest trainer over SPARSE features: same
-    trajectory semantics as langid_wide.wide_train_trace (pinned equal
-    at DIM=16 with word_ngrams=()), with nnz-bound per-iteration cost.
+    trajectory semantics as langid.langid_train_trace (pinned equal
+    under the layout map at DIM=16 with word_ngrams=()), with nnz-bound
+    per-iteration cost.
     Per chunk: flatten (idx, val), dots = np.add.reduceat, gradient =
     np.add.at scatter of np.repeat(pq - y, nnz) * val -- both exact
     int64 under the flush bound."""
@@ -334,8 +364,10 @@ def langid_scores_wide_union(
     _trained=None,
 ) -> DataFrame:
     """(doc_id, labeled_lang, pred_lang, confidence, margin_q6) under
-    the union model at fastText width -- langid_scores_wide's exact
-    output contract, scored sparsely (per-doc cost = support size).
+    the sparse model -- langid.langid_scores' exact output contract
+    (argmax with lexicographic tie-break, quantized confidence,
+    winner-minus-runner-up margin), scored sparsely (per-doc cost =
+    support size).
     Registered rows-only (module doc)."""
     import numpy as np
 
@@ -404,8 +436,10 @@ def langid_scores_wide_union(
     )
 
 
-#: Per-process memo of trained union models (the _WIDE_CACHE pattern,
-#: keyed on the table fingerprint so regenerated tables retrain).
+#: Per-process memo of trained models: (sf_dir, parquet fingerprint,
+#: iters, lr, dim, word_ngrams) under a weakly-referenced session --
+#: bench reps and sweep double-runs train once, regenerated tables
+#: retrain.
 import weakref
 
 _UNION_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
@@ -417,13 +451,16 @@ def union_trained_for_table(
     iters: int = LID_ITERS,
     lr: float = LID_LR,
     dim: int = UNION_DIM,
+    word_ngrams: tuple = UNION_WORD_NGRAMS,
 ):
     from ..sources.io import load_table
     from .langid import _table_fingerprint
 
     per = _UNION_CACHE.setdefault(spark, {})
-    key = (sf_dir, _table_fingerprint(sf_dir), iters, lr, dim)
+    key = (sf_dir, _table_fingerprint(sf_dir), iters, lr, dim, word_ngrams)
     if key not in per:
         docs = load_table(spark, sf_dir, "documents")
-        per[key] = union_train_trace(docs, iters, lr, dim=dim)
+        per[key] = union_train_trace(
+            docs, iters, lr, dim=dim, word_ngrams=word_ngrams
+        )
     return per[key]

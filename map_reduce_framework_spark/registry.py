@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from . import curation
 from .operators import (apps, audio, clustering, dedup, fuzzy, graph, html_extract,
-                        incremental, kv, langid, langid_union, langid_wide, layout,
+                        incremental, kv, langid, langid_union, layout,
                         mpeg_audio, multimodal, pipeline, reshape, similarity, sketch,
                         temporal, text_analysis, video_meta)
 from .operators import relational as rel
@@ -520,27 +520,30 @@ def q_langid_mixture_sample(spark, sf_dir):
     )
 
 
-# Wide-DIM twin: the fastText-regime vector-shaped trainer at DIM=256.
-# Rows-only BY DESIGN: the unrolled training-trajectory oracle at this
-# width would be megabytes of SQL; correctness is carried by (a) the
-# bit-for-bit independent-Python pin and (b) DIM=16 equality against the
-# hash-exact JVM trainer (tests/test_round10_ops.py::TestWideLangid).
+# The sparse vector trainer (operators/langid_union.py) at two widths.
+# Rows-only BY DESIGN: the unrolled training-trajectory oracle at these
+# widths would be megabytes of SQL; correctness is carried by the
+# bit-for-bit independent-Python pin (char-only and union features) plus
+# dim=16 char-only equality to the hash-exact JVM trainer
+# (tests/test_round10_ops.py::TestWideLangid,
+# tests/test_round11_ops.py::TestUnionLangid).
 @register("langid_scores_wide", None)
 def q_langid_scores_wide(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    return langid_wide.langid_scores_wide(
-        docs, _trained=langid_wide.wide_trained_for_table(spark, sf_dir)
+    return langid_union.langid_scores_wide_union(
+        docs,
+        dim=langid_union.WIDE_DIM,
+        word_ngrams=(),
+        _trained=langid_union.union_trained_for_table(
+            spark, sf_dir, dim=langid_union.WIDE_DIM, word_ngrams=()
+        ),
     )
 
 
-# fastText-regime union features: char-3 + word-1/word-2 grams hashed
-# into 65536 buckets over the SPARSE vector pipeline (nnz-bound,
-# DIM-independent cost). Rows-only by the same argument as
-# langid_scores_wide; correctness carried by the independent-Python pin
-# plus char-only DIM=16 equality to the dense trainer
-# (tests/test_round11_ops.py::TestUnionLangid).
 @register("langid_scores_wide_union", None)
 def q_langid_scores_wide_union(spark, sf_dir):
+    # fastText-regime union: char-3 + word-1/word-2 grams hashed into
+    # 65536 buckets
     docs = load_table(spark, sf_dir, "documents")
     return langid_union.langid_scores_wide_union(
         docs, _trained=langid_union.union_trained_for_table(spark, sf_dir)

@@ -32,9 +32,17 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for this engine.
 
     ``speculation=True`` reproduces the reference's Tier-2 behavior
-    (backup tasks at the 0.8 completion quantile).
+    (backup tasks at the 0.8 completion quantile). The driver heap is
+    ``$SPARK_DRIVER_MEMORY``, else half of physical RAM capped at 8g, so
+    the default fits the machine. Every session of the engine (tests,
+    ``bench.py`` and its isolated reruns, ``experiments/measure_query.py``)
+    comes from here, so they all run the same engine.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    driver_memory = os.environ.get(
+        "SPARK_DRIVER_MEMORY", f"{min(8192, ram_mb // 2)}m"
+    )
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
@@ -52,7 +60,7 @@ def get_spark(
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", driver_memory)
         # Reliable df.checkpoint() files are NOT deleted by default, so
         # iterative operators routing rounds through stage_checkpoint
         # (CC, k-core, PageRank) would leak one full relation copy per

@@ -560,101 +560,35 @@ class TestCrossEpochDedup:
         assert row["lang"] == "en" and row["source"] == "crawl"
 
 # ---------------------------------------------------------------------------
-# Wide-DIM langid (VERDICT r9 ask #4)
+# Wide-DIM langid (VERDICT r9 ask #4): the sparse vector trainer at
+# char-3-only DIM=256
 # ---------------------------------------------------------------------------
 
 
-def _independent_wide_trace(rows, dim, iters, lr):
-    """From-scratch pure-Python twin of wide_train_trace: dict-based
-    counting, Python-int gradients, math.exp/math.log -- shares NO code
-    with the engine path (the BPE bit-for-bit pin pattern)."""
-    import hashlib
-    import math
-
-    from map_reduce_framework_spark.operators.langid import (
-        LID_LANGS,
-        LID_SEED,
-    )
-
-    S = 1_000_000
-    feats = []
-    for _doc_id, lang, text in rows:
-        t = text or ""
-        ng = max(len(t) - 2, 0)
-        vec = [0] * (dim + 1)
-        vec[0] = S
-        counts = {}
-        for i in range(ng):
-            g = t[i : i + 3]
-            b = int(
-                hashlib.md5(f"{LID_SEED}:{g}".encode()).hexdigest()[:15], 16
-            ) % dim
-            counts[b] = counts.get(b, 0) + 1
-        if ng:
-            for b, c in counts.items():
-                vec[b + 1] = math.floor((c / ng) * 1.0e6 + 0.5)
-        feats.append((lang, vec))
-    w = {l: [0] * (dim + 1) for l in LID_LANGS}
-    trace = []
-    n = len(feats)
-    for t_i in range(1, iters + 1):
-        for l in LID_LANGS:
-            grad = [0] * (dim + 1)
-            nll = 0
-            for lang, vec in feats:
-                dot = sum(wj * xj for wj, xj in zip(w[l], vec))
-                z = float(dot) / 1.0e12
-                pq = math.floor(float(S) / (1.0 + math.exp(-z)) + 0.5)
-                y = S if lang == l else 0
-                for j, xj in enumerate(vec):
-                    grad[j] += (pq - y) * xj
-                pc = float(min(max(pq, 1), S - 1)) / 1.0e6
-                nll += math.floor(
-                    -math.log(pc if lang == l else 1.0 - pc) * 1.0e6 + 0.5
-                )
-            w[l] = [
-                wq - math.floor(float(grad[j]) * lr / (float(n) * 1e6) + 0.5)
-                for j, wq in enumerate(w[l])
-            ]
-            trace.append(
-                (t_i, l, float(nll) / (float(n) * 1e6),
-                 *[float(wq) / 1e6 for wq in w[l]])
-            )
-    return trace, w
-
-
 class TestWideLangid:
-    def test_bit_for_bit_vs_independent_python_twin(self, spark, sf_smoke):
-        from map_reduce_framework_spark.operators import langid_wide as LW
-
-        docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
-        dim, iters, lr = 32, 3, 4.0
-        eng_rows, eng_w = LW.wide_train_trace(
-            docs, iters, lr, dim=dim
-        )
-        raw = [
-            (r["doc_id"], r["lang"], r["text"])
-            for r in docs.select("doc_id", "lang", "text").collect()
-        ]
-        ind_rows, ind_w = _independent_wide_trace(raw, dim, iters, lr)
-        assert eng_w == ind_w
-        assert eng_rows == ind_rows
-
     def test_dim16_equals_jvm_trainer_trace(self, spark, sf_smoke):
-        """At DIM=16 the wide vector path reproduces the hash-exact JVM
-        trainer's committed trace bit-for-bit -- quantization, sigmoid,
-        NLL, and update rule are the same math in two runtimes."""
-        from map_reduce_framework_spark.operators import langid, langid_wide
+        """At DIM=16 with char grams only, the sparse vector trainer
+        reproduces the hash-exact JVM trainer's committed trace --
+        quantization, sigmoid, NLL, and update rule are the same math in
+        two runtimes. Losses are equal bit-for-bit; the weights are equal
+        under the layout map (JVM: bias at 0, bucket b at b+1; sparse:
+        bucket b at b, bias at dim)."""
+        from map_reduce_framework_spark.operators import langid
+        from map_reduce_framework_spark.operators import langid_union as LU
 
-        docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
-        wide_rows, wide_w = langid_wide.wide_train_trace(
-            docs, langid.LID_ITERS, langid.LID_LR, dim=16
+        docs = load_table(spark, sf_smoke, "documents")
+        rows, w = LU.union_train_trace(
+            docs, langid.LID_ITERS, langid.LID_LR, dim=16, word_ngrams=()
         )
         jvm_rows, jvm_w = langid._trace_for_table(spark, sf_smoke)
-        assert wide_w == jvm_w
-        assert wide_rows == jvm_rows
+        assert rows == [r[:3] for r in jvm_rows]
+        assert w.keys() == jvm_w.keys()
+        for l, jw in jvm_w.items():
+            assert w[l] == jw[1:] + jw[:1], l
 
     def test_registered_scores_contract(self, spark, sf_smoke):
+        import hashlib
+
         from map_reduce_framework_spark.registry import REGISTRY
 
         df = REGISTRY["langid_scores_wide"].fn(spark, sf_smoke)
@@ -669,71 +603,76 @@ class TestWideLangid:
         for r in rows[:50]:
             assert 0.0 <= r["confidence"] <= 1.0
             assert r["margin_q6"] >= 0
+        # the sf0.001 rows of the earlier dense DIM=256 trainer
+        assert hashlib.md5(
+            repr(sorted(tuple(r) for r in rows)).encode()
+        ).hexdigest() == "68fd87feff8adddcfbc8f288e1033ce2"
 
-    def test_plain_ingest_leg_accepts_html_drop(self, spark, tmp_path):
-        """The non-epoch streaming leg also takes a raw-HTML drop
-        directory: extraction runs in the stream, and the committed
-        shards pack the quality-pass EXTRACTED documents."""
-        from map_reduce_framework_spark.operators.html_extract import (
-            synth_pages,
-        )
-        from map_reduce_framework_spark.sources.shard_writer import (
-            read_manifest,
-        )
-        from map_reduce_framework_spark.streaming.ops import (
-            stream_ingest_training_shards,
-        )
 
-        docs = _synthetic_docs(
-            spark, [(1, _BASE_TEXT), (2, "tiny")]  # doc 2 fails quality
-        )
-        source = str(tmp_path / "drop")
-        synth_pages(docs).coalesce(1).write.mode("append").parquet(source)
-        shards = stream_ingest_training_shards(
-            spark, "unused-sf-dir", str(tmp_path / "work"),
-            source_dir=source,
-        )
-        m = read_manifest(shards)
-        assert m["total_docs"] == 1  # doc 1 extracted + quality-pass
+def test_plain_ingest_leg_accepts_html_drop(spark, tmp_path):
+    """The non-epoch streaming leg also takes a raw-HTML drop
+    directory: extraction runs in the stream, and the committed
+    shards pack the quality-pass EXTRACTED documents."""
+    from map_reduce_framework_spark.operators.html_extract import (
+        synth_pages,
+    )
+    from map_reduce_framework_spark.sources.shard_writer import (
+        read_manifest,
+    )
+    from map_reduce_framework_spark.streaming.ops import (
+        stream_ingest_training_shards,
+    )
 
-    def test_zero_survivor_wave_tombstones_no_epoch(self, spark, tmp_path):
-        """A wave whose every doc near-duplicates earlier epochs
-        commits NO epoch dir (the ledger matches the oracle's
-        nonempty-wave numbering) but records its files as consumed in
-        an atomic tombstone -- the next genuinely-new wave takes the
-        next epoch number and the dropped files are never re-read."""
-        from map_reduce_framework_spark.streaming.ops import (
-            stream_ingest_epoch,
-        )
+    docs = _synthetic_docs(
+        spark, [(1, _BASE_TEXT), (2, "tiny")]  # doc 2 fails quality
+    )
+    source = str(tmp_path / "drop")
+    synth_pages(docs).coalesce(1).write.mode("append").parquet(source)
+    shards = stream_ingest_training_shards(
+        spark, "unused-sf-dir", str(tmp_path / "work"),
+        source_dir=source,
+    )
+    m = read_manifest(shards)
+    assert m["total_docs"] == 1  # doc 1 extracted + quality-pass
 
-        source = str(tmp_path / "source")
-        work = str(tmp_path / "work")
-        _synthetic_docs(spark, [(1, _BASE_TEXT)]).coalesce(1).write.mode(
-            "append"
-        ).parquet(source)
-        assert stream_ingest_epoch(spark, source, work).endswith(
-            "epoch-00000"
-        )
-        # wave 2: ONLY a near-duplicate -> zero survivors
-        _synthetic_docs(
-            spark, [(11, _BASE_TEXT.replace("lazy dog", "lazy cat"))]
-        ).coalesce(1).write.mode("append").parquet(source)
-        assert stream_ingest_epoch(spark, source, work) is None
-        names = os.listdir(work)
-        assert not any(n == "epoch-00001" for n in names)
-        assert any(n.startswith("consumed-") for n in names)
-        # re-entry: nothing new, no reprocessing loop
-        assert stream_ingest_epoch(spark, source, work) is None
-        # wave 3: fresh content takes the NEXT number
-        _synthetic_docs(
-            spark,
-            [(21, "entirely new prose about vectorized execution and "
-                  "columnar readers that shares nothing with wave one "
-                  "except the english language itself today")],
-        ).coalesce(1).write.mode("append").parquet(source)
-        d = stream_ingest_epoch(spark, source, work)
-        assert d and d.endswith("epoch-00001")
 
+def test_zero_survivor_wave_tombstones_no_epoch(spark, tmp_path):
+    """A wave whose every doc near-duplicates earlier epochs
+    commits NO epoch dir (the ledger matches the oracle's
+    nonempty-wave numbering) but records its files as consumed in
+    an atomic tombstone -- the next genuinely-new wave takes the
+    next epoch number and the dropped files are never re-read."""
+    from map_reduce_framework_spark.streaming.ops import (
+        stream_ingest_epoch,
+    )
+
+    source = str(tmp_path / "source")
+    work = str(tmp_path / "work")
+    _synthetic_docs(spark, [(1, _BASE_TEXT)]).coalesce(1).write.mode(
+        "append"
+    ).parquet(source)
+    assert stream_ingest_epoch(spark, source, work).endswith(
+        "epoch-00000"
+    )
+    # wave 2: ONLY a near-duplicate -> zero survivors
+    _synthetic_docs(
+        spark, [(11, _BASE_TEXT.replace("lazy dog", "lazy cat"))]
+    ).coalesce(1).write.mode("append").parquet(source)
+    assert stream_ingest_epoch(spark, source, work) is None
+    names = os.listdir(work)
+    assert not any(n == "epoch-00001" for n in names)
+    assert any(n.startswith("consumed-") for n in names)
+    # re-entry: nothing new, no reprocessing loop
+    assert stream_ingest_epoch(spark, source, work) is None
+    # wave 3: fresh content takes the NEXT number
+    _synthetic_docs(
+        spark,
+        [(21, "entirely new prose about vectorized execution and "
+              "columnar readers that shares nothing with wave one "
+              "except the english language itself today")],
+    ).coalesce(1).write.mode("append").parquet(source)
+    d = stream_ingest_epoch(spark, source, work)
+    assert d and d.endswith("epoch-00001")
 
 
 def _mp4_quad_frames(seed: bytes):

@@ -40,27 +40,40 @@ def test_mixture_plan_zero_stratum_degrades_to_null(spark):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r10 #2: the wide-langid trainer is exact under ANY partition
-# size -- chunked int64 matmuls + Python-int accumulators + flushed
-# partial row-groups produce the identical trajectory
+# ADVICE r10 #2: the sparse langid trainer is exact under ANY partition
+# size -- bounded chunks + flushed partial row-groups produce the
+# identical trajectory
 # ---------------------------------------------------------------------------
 
 
 def test_wide_trainer_invariant_under_chunk_and_flush(spark, sf_smoke):
-    import map_reduce_framework_spark.operators.langid_wide as LW
+    import map_reduce_framework_spark.operators.langid_union as LU
     from map_reduce_framework_spark.sources.io import load_table
 
-    docs = load_table(spark, sf_smoke, "documents").limit(40)
-    base_rows, base_w = LW.wide_train_trace(docs, iters=2, dim=16)
-    # degenerate chunk/flush sizes force many chunks per batch and
-    # many emitted partial row-groups per partition; integer sums are
-    # associative, so the committed trajectory must not move by a bit
-    old_chunk, old_flush = LW._MM_CHUNK, LW._FLUSH_ROWS
+    docs = load_table(spark, sf_smoke, "documents")
+    base_rows, base_w = LU.union_train_trace(
+        docs, iters=2, dim=16, word_ngrams=(1, 2)
+    )
+    # degenerate chunk/flush/batch sizes force many chunks per batch,
+    # accumulators carried across batches and many emitted partial
+    # row-groups per partition (every partition holds well over 7
+    # rows); integer sums are associative, so the committed trajectory
+    # must not move by a bit
+    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_batch = spark.conf.get(conf_key, None)
+    old_chunk, old_flush = LU._MM_CHUNK, LU._FLUSH_ROWS
     try:
-        LW._MM_CHUNK, LW._FLUSH_ROWS = 3, 7
-        chunked_rows, chunked_w = LW.wide_train_trace(docs, iters=2, dim=16)
+        LU._MM_CHUNK, LU._FLUSH_ROWS = 3, 7
+        spark.conf.set(conf_key, "5")
+        chunked_rows, chunked_w = LU.union_train_trace(
+            docs, iters=2, dim=16, word_ngrams=(1, 2)
+        )
     finally:
-        LW._MM_CHUNK, LW._FLUSH_ROWS = old_chunk, old_flush
+        LU._MM_CHUNK, LU._FLUSH_ROWS = old_chunk, old_flush
+        if old_batch is None:
+            spark.conf.unset(conf_key)
+        else:
+            spark.conf.set(conf_key, old_batch)
     assert chunked_rows == base_rows
     assert chunked_w == base_w
 
@@ -874,32 +887,14 @@ def _independent_union_trace(rows, dim, iters, lr, char_ngram, word_ngrams):
 
 
 class TestUnionLangid:
-    def test_char_only_dim16_equals_dense_trainer_under_layout_map(
-        self, spark, sf_smoke
+    @pytest.mark.parametrize(
+        "dim,word_ngrams",
+        [(1024, (1, 2)), (32, ())],
+        ids=["union_dim1024", "char_only_dim32"],
+    )
+    def test_bit_for_bit_vs_independent_python_twin(
+        self, spark, sf_smoke, dim, word_ngrams
     ):
-        """With word_ngrams=() the union features are the wide
-        features under an index PERMUTATION (wide: bias at 0, bucket b
-        at b+1; union: bucket b at b, bias at dim) -- so the two
-        trainers must produce the same losses and the same weights
-        under that map. The wide trainer is itself pinned bit-for-bit
-        to the hash-exact narrow JVM trainer (round 10), closing the
-        chain."""
-        import map_reduce_framework_spark.operators.langid_union as LU
-        import map_reduce_framework_spark.operators.langid_wide as LW
-        from map_reduce_framework_spark.sources.io import load_table
-
-        docs = load_table(spark, sf_smoke, "documents").limit(40)
-        wr, ww = LW.wide_train_trace(docs, iters=2, dim=16)
-        ur, uw = LU.union_train_trace(
-            docs, iters=2, dim=16, word_ngrams=()
-        )
-        assert [r[:3] for r in wr] == ur  # identical loss trajectory
-        for l in ww:
-            assert uw[l][16] == ww[l][0]  # bias
-            for b in range(16):
-                assert uw[l][b] == ww[l][b + 1], (l, b)
-
-    def test_bit_for_bit_vs_independent_python_twin(self, spark, sf_smoke):
         import map_reduce_framework_spark.operators.langid_union as LU
         from map_reduce_framework_spark.sources.io import load_table
 
@@ -909,10 +904,10 @@ class TestUnionLangid:
             for r in docs.select("doc_id", "lang", "text").collect()
         ]
         got_rows, got_w = LU.union_train_trace(
-            docs, iters=2, dim=1024, word_ngrams=(1, 2)
+            docs, iters=2, dim=dim, word_ngrams=word_ngrams
         )
         exp_rows, exp_w = _independent_union_trace(
-            rows, 1024, 2, 4.0, 3, (1, 2)
+            rows, dim, 2, 4.0, 3, word_ngrams
         )
         assert got_rows == exp_rows
         for l in exp_w:
