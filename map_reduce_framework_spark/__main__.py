@@ -95,13 +95,10 @@ def _query_main(argv: list[str]) -> None:
     if not args.out and not args.show:
         raise SystemExit("pass -o/--out DIR or --show N")
 
-    from pyspark.sql import SparkSession
+    from .session import get_spark
 
-    spark = (
-        SparkSession.builder.appName(f"query-{args.name}")
-        .master(f"local[{args.cpus}]")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        f"query-{args.name}", extra_conf={"spark.master": f"local[{args.cpus}]"}
     )
     spark.sparkContext.setLogLevel("ERROR")
     df = registry.REGISTRY[args.name].fn(spark, args.sf_dir)
@@ -129,14 +126,12 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--cpus", default="*", help="local[...] parallelism")
     args = p.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from .session import get_spark
 
-    spark = (
-        SparkSession.builder.appName(f"mr-{args.app}")
-        .master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", str(args.n_reduce))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        f"mr-{args.app}",
+        shuffle_partitions=args.n_reduce,
+        extra_conf={"spark.master": f"local[{args.cpus}]"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -10,6 +10,7 @@ policy, with the JVM expression form kept as the parity reference.
 from __future__ import annotations
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -154,7 +155,7 @@ def _fan_out(df: DataFrame) -> DataFrame:
     try:
         if df.rdd.getNumPartitions() >= target:
             return df
-    except Exception:
+    except AnalysisException:  # streaming input: no RDD to count
         pass
     return df.repartition(target)
 

@@ -75,3 +75,32 @@ def test_cli_query_subcommand(tmp_path, capsys):
             rows.extend(list(csv.DictReader(fh)))
     assert len(rows) == 6  # q1's 4-group pricing summary at this sf
     assert "sum_qty" in rows[0]
+
+
+def test_cli_wc_module_entry_point(tmp_path):
+    """``python -m map_reduce_framework_spark wc`` in a fresh process (its
+    own ``get_spark`` session) writes the reference's ``mr-out-*`` lines."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    (tmp_path / "a.txt").write_text("the quick the\n")
+    (tmp_path / "b.txt").write_text("quick dog\n")
+    out = tmp_path / "out"
+    proc = subprocess.run(
+        [
+            sys.executable, "-m", "map_reduce_framework_spark", "wc",
+            str(tmp_path / "a.txt"), str(tmp_path / "b.txt"),
+            "-o", str(out), "--n-reduce", "2", "--cpus", "2",
+        ],
+        cwd=Path(__file__).resolve().parents[1],
+        env={**os.environ, "SPARK_DRIVER_MEMORY": "1g"},
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    files = sorted(out.glob("mr-out-*"))
+    assert len(files) == 2
+    lines = [line for f in files for line in f.read_text().splitlines()]
+    assert sorted(lines) == ["dog 1", "quick 2", "the 2"]

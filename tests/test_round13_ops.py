@@ -262,6 +262,17 @@ class TestFanOutGate:
         out = _fan_out(df)
         assert "Repartition" in out._jdf.queryExecution().logical().toString()
 
+    def test_keeps_exchange_for_streaming_input(self, spark):
+        """A streaming input has no RDD to count (Spark raises
+        AnalysisException), so it keeps the unconditional exchange."""
+        from map_reduce_framework_spark.operators.text_analysis import (
+            _fan_out,
+        )
+
+        df = spark.readStream.format("rate").load()
+        out = _fan_out(df)
+        assert "Repartition" in out._jdf.queryExecution().logical().toString()
+
     def test_elides_exchange_for_wide_input(self, spark):
         from map_reduce_framework_spark.operators.text_analysis import (
             _fan_out,
