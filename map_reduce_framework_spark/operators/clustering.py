@@ -56,17 +56,21 @@ def _quantized(embeddings: DataFrame, n_parts: int) -> DataFrame:
     return embeddings.repartition(n_parts).select("vec_id", v.alias("v"))
 
 
-def _assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
-    """Nearest centroid per vector by squared L2; ties -> lowest cid."""
-    dist = (
+def _sq_dist():
+    """Squared L2 between vector ``v`` and centroid ``cv``."""
+    return (
         dot(F.col("v"), F.col("v"))
         - 2 * dot(F.col("v"), F.col("cv"))
         + dot(F.col("cv"), F.col("cv"))
     )
+
+
+def _assign(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Nearest centroid per vector by squared L2; ties -> lowest cid."""
     w = Window.partitionBy("vec_id").orderBy("dist", "cid")
     return (
         vectors.join(F.broadcast(centroids))
-        .select("vec_id", "v", "cid", dist.alias("dist"))
+        .select("vec_id", "v", "cid", _sq_dist().alias("dist"))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") == 1)
         .drop("rnk")
@@ -95,20 +99,25 @@ def _update(assigned: DataFrame) -> DataFrame:
     )
 
 
-def kmeans_lloyd(
-    embeddings: DataFrame, k: int = K, iters: int = ITERS
-) -> DataFrame:
-    """``iters`` Lloyd rounds from deterministic seeds (vec_id < k), then
-    a final assignment pass. Returns (vec_id, cluster, dist)."""
-    n_parts = shuffle_partitions(embeddings)
-    vectors = _quantized(embeddings, n_parts)
+def _train_centroids(vectors: DataFrame, k: int, iters: int) -> DataFrame:
+    """The (cid, cv) centroids after ``iters`` Lloyd rounds over the
+    quantized ``vectors`` from the deterministic seeds (vec_id < k),
+    checkpointed so later passes do not re-plan the chained rounds."""
     cents = vectors.filter(F.col("vec_id") < k).select(
         F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("cv")
     )
     for _ in range(iters):
         cents = _update(_assign(vectors, cents))
-    cents = stage_checkpoint(cents)
-    final = _assign(vectors, cents)
+    return stage_checkpoint(cents)
+
+
+def kmeans_lloyd(
+    embeddings: DataFrame, k: int = K, iters: int = ITERS
+) -> DataFrame:
+    """``iters`` Lloyd rounds from deterministic seeds (vec_id < k), then
+    a final assignment pass. Returns (vec_id, cluster, dist)."""
+    vectors = _quantized(embeddings, shuffle_partitions(embeddings))
+    final = _assign(vectors, _train_centroids(vectors, k, iters))
     return final.select(
         "vec_id", F.col("cid").alias("cluster"), F.col("dist").alias("dist")
     )
@@ -484,24 +493,14 @@ def ann_ivf_trained(
     that the oracle can unroll and hash-check end to end."""
     n_parts = shuffle_partitions(embeddings)
     vectors = _quantized(embeddings, n_parts)
-    cents = vectors.filter(F.col("vec_id") < K).select(
-        F.col("vec_id").cast("int").alias("cid"), F.col("v").alias("cv")
-    )
-    for _ in range(ITERS):
-        cents = _update(_assign(vectors, cents))
-    cents = stage_checkpoint(cents)
+    cents = _train_centroids(vectors, K, ITERS)
     cells = _assign(vectors, cents).select("vec_id", "cid")
-    dist = (
-        dot(F.col("v"), F.col("v"))
-        - 2 * dot(F.col("v"), F.col("cv"))
-        + dot(F.col("cv"), F.col("cv"))
-    )
     wq = Window.partitionBy("q_id").orderBy("dist", "cid")
     probes = (
         vectors.filter(F.col("vec_id") < n_queries)
         .select(F.col("vec_id").alias("q_id"), "v")
         .join(F.broadcast(cents))
-        .select("q_id", "cid", dist.alias("dist"))
+        .select("q_id", "cid", _sq_dist().alias("dist"))
         .withColumn("rnk", F.row_number().over(wq))
         .filter(F.col("rnk") <= n_probe)
         .select("q_id", "cid")

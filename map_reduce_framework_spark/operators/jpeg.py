@@ -1,19 +1,19 @@
-"""Pure-Python baseline JPEG codec (ITU-T T.81) -- closing the last
-``NotImplementedError`` in the multimodal decode path (VERDICT r6 ask
-#6).
+"""Pure-Python JPEG codec (ITU-T T.81).
 
-``decode_jpeg_pixels`` handles baseline sequential DCT (SOF0): marker
-walk, DQT (8/16-bit), DHT (canonical Huffman per Annex C), SOS,
-restart intervals (DRI/RSTn), byte-unstuffing, per-MCU entropy decode
-with arbitrary sampling factors (4:4:4, 4:2:2, 4:2:0 via the generic
-h x v block loop), dequantize + dezigzag, float separable IDCT
-(A.T @ B @ A with the orthonormal DCT-II basis), level shift, chroma
-replication upsample, JFIF YCbCr -> RGB. Grayscale (1 component) and
-color (3 components) both decode. PROGRESSIVE (SOF2, Huffman) decodes
-too since round 9 -- spectral selection, successive approximation,
-EOB runs, AC refinement, restarts (the `_decode_progressive` section
-below). The remaining boundary is arithmetic coding and 12-bit
-precision (return None), documented in SCALE.md.
+``decode_jpeg_pixels`` decodes every non-differential process:
+baseline (SOF0), extended sequential (SOF1, 8/12-bit), progressive
+(SOF2), lossless (SOF3, ``jpeg_lossless.py``), and sequential (SOF9,
+8/12-bit) and progressive (SOF10) arithmetic (``jpeg_arith.py``); only
+the differential processes return None (SCALE.md). ONE marker reader
+serves the package: ``_jpeg_segment`` walks the segments,
+``_JpegTables`` parses DQT/DHT/DAC/DRI, ``_read_sof`` the frame header,
+and the walk runs once, handing on to the process its first frame
+header names; SOF2 and SOF10 share one progressive driver.
+Sequential decode: DQT (8/16-bit), DHT (canonical Huffman per Annex
+C), restart intervals, byte-unstuffing, per-MCU entropy decode with
+any h x v sampling, dequantize + dezigzag, float separable IDCT (A.T @
+B @ A, orthonormal DCT-II basis), level shift, chroma replication
+upsample, JFIF YCbCr -> RGB, for 1 or 3 components.
 
 ``encode_jpeg`` is the matching minimal encoder (used by the tests and
 the registered query path): baseline SOF0, quality-1 quantization
@@ -250,183 +250,246 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-def decode_jpeg_pixels(payload: bytes):
-    """JPEG pixel decode (baseline SOF0 and progressive SOF2): numpy
-    uint8 (height, width, 3) RGB, or None when the payload is not
-    decodable (wrong magic, arithmetic/12-bit, structural corruption).
-    TOTAL over arbitrary bytes: any out-of-bounds segment access a
-    crafted truncation could reach is converted to the None contract
-    here, never an IndexError into the caller's Arrow batch."""
-    try:
-        return _decode_jpeg_pixels(payload)
-    except (IndexError, ValueError):
-        return None
+# Marker-segment layer (T.81 B.1.1): the one reader behind every JPEG
+# walk in the package -- the decoders here, in jpeg_arith.py and
+# jpeg_lossless.py, and multimodal.py's header probes.
+
+_SOS, _EOI = 0xDA, 0xD9
+_DHT, _DAC, _DQT, _DRI = 0xC4, 0xCC, 0xDB, 0xDD
+#: frame-header (SOFn) markers: 0xC0-0xCF minus DHT, JPG and DAC
+_SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {_DHT, 0xC8, _DAC}
+_TABLE_MARKERS = (_DQT, _DHT, _DAC, _DRI)
 
 
-def _decode_jpeg_pixels(payload: bytes):
-    import numpy as np
-
+def _jpeg_marker(payload, i: int):
+    """``(marker, at)`` of the first marker at or after byte ``i``
+    that heads a segment or ends the image; fill bytes (0xFF 0xFF) and
+    standalone markers (TEM, RSTn, SOI) are stepped over. Running out
+    of data reads as EOI; None when the stream desyncs (no 0xFF where
+    a marker must start)."""
     n = len(payload)
-    if n < 4 or payload[:2] != b"\xff\xd8":
-        return None
-    quant: dict[int, "np.ndarray"] = {}
-    huff_dc: dict[int, _HuffTable] = {}
-    huff_ac: dict[int, _HuffTable] = {}
-    frame = None  # (H, W, [(comp_id, h, v, tq), ...])
-    arithmetic = False  # SOF9: sequential arithmetic (QM-coded)
-    conditioning: dict = {}  # DAC: ('dc'|'ac', tbl) -> (L, U) / Kx
-    restart_interval = 0
-    i = 2
-    while i + 4 <= n:
+    while i + 2 <= n:
         if payload[i] != 0xFF:
             return None
         marker = payload[i + 1]
         if marker == 0xFF:
             i += 1
-            continue
-        if marker == 0x01 or 0xD0 <= marker <= 0xD8:
+        elif marker == 0x01 or 0xD0 <= marker <= 0xD8:
             i += 2
-            continue
-        if marker == 0xD9:  # EOI before SOS
-            return None
-        seg_len = int.from_bytes(payload[i + 2 : i + 4], "big")
-        if seg_len < 2 or i + 2 + seg_len > n:
-            return None
-        body = payload[i + 4 : i + 2 + seg_len]
-        if marker == 0xDB:  # DQT
+        else:
+            return marker, i
+    return _EOI, i
+
+
+def _jpeg_segment(payload, i: int):
+    """The next marker segment at or after byte ``i``: ``(marker,
+    body, end)``, ``end`` being the offset just past it, or ``(EOI,
+    b"", end)`` at EOI or the end of the data. None on desync, or when
+    the u16 length (which counts itself) is under 2 or runs past the
+    payload. The one place a JPEG segment length is read."""
+    found = _jpeg_marker(payload, i)
+    if found is None:
+        return None
+    marker, at = found
+    if marker == _EOI:
+        return _EOI, b"", at + 2
+    if at + 4 > len(payload):
+        return None
+    end = at + 2 + int.from_bytes(payload[at + 2 : at + 4], "big")
+    if end < at + 4 or end > len(payload):
+        return None
+    return marker, payload[at + 4 : end], end
+
+
+class _JpegTables:
+    """The DQT / DHT / DAC / DRI state one marker walk gathers
+    (T.81 B.2.4), and the walk itself."""
+
+    def __init__(self):
+        self.quant: dict = {}  # Tq -> 8x8 dequantization table
+        self.huff_dc: dict[int, _HuffTable] = {}
+        self.huff_ac: dict[int, _HuffTable] = {}
+        self.conditioning: dict = {}  # ('dc'|'ac', tbl) -> (L, U) / Kx
+        self.dri = 0
+
+    def walk(self, payload, i: int, reads=_TABLE_MARKERS):
+        """Read segments from byte ``i`` up to the next frame header,
+        SOS or EOI and return that segment (``_jpeg_segment``'s
+        triple). Table segments in ``reads`` are parsed; every other
+        segment is passed over unread -- each process reads only the
+        tables it uses, so a malformed table of another kind never
+        fails it. None on a broken stream or a malformed table."""
+        while True:
+            seg = _jpeg_segment(payload, i)
+            if seg is None:
+                return None
+            marker, body, i = seg
+            if marker in _SOF_MARKERS or marker in (_SOS, _EOI):
+                return seg
+            if marker in reads and not self._read(marker, body):
+                return None
+
+    def _read(self, marker: int, body: bytes) -> bool:
+        """Parse one table segment; False when it is malformed."""
+        if marker == _DQT:
+            import numpy as np
+
             p = 0
             while p < len(body):
                 pq, tq = body[p] >> 4, body[p] & 0x0F
                 p += 1
                 if pq not in (0, 1) or tq > 3:
-                    return None
+                    return False
                 width = 2 if pq else 1
                 if p + 64 * width > len(body):
-                    return None
-                vals = [
-                    int.from_bytes(body[p + k * width : p + (k + 1) * width], "big")
-                    for k in range(64)
-                ]
-                p += 64 * width
+                    return False
+                vals = np.frombuffer(body, ">u2" if pq else "u1", 64, p)
                 q = np.zeros((8, 8))
                 for k, (r, c) in enumerate(_ZIGZAG):
                     q[r, c] = vals[k]
-                quant[tq] = q
-        elif marker == 0xC4:  # DHT
+                p += 64 * width
+                self.quant[tq] = q
+        elif marker == _DHT:
             p = 0
             while p + 17 <= len(body):
                 tc, th = body[p] >> 4, body[p] & 0x0F
                 counts = list(body[p + 1 : p + 17])
                 total = sum(counts)
                 p += 17
-                if p + total > len(body):
-                    return None
+                if p + total > len(body) or tc > 1:
+                    return False
                 table = _huff_table(counts, body[p : p + total])
                 p += total
-                if tc == 0:
-                    huff_dc[th] = table
-                elif tc == 1:
-                    huff_ac[th] = table
-                else:
-                    return None
-        elif marker in (0xC0, 0xC1, 0xC9):
-            # ONE frame-header parse for the sequential processes:
-            # SOF0 baseline (8-bit by spec), SOF1 extended sequential
-            # (8- or 12-bit, round 11), SOF9 sequential arithmetic
-            # (8- or 12-bit) -- only entropy route + sample depth vary
-            precision = body[0]
-            if precision not in (8, 12) or (
-                precision == 12 and marker == 0xC0
-            ):
-                return None
-            height = int.from_bytes(body[1:3], "big")
-            width = int.from_bytes(body[3:5], "big")
-            nc = body[5]
-            if height <= 0 or width <= 0 or nc not in (1, 3):
-                return None
-            comps = []
-            for c in range(nc):
-                cid = body[6 + 3 * c]
-                hv = body[7 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * c]))
-            frame = (height, width, comps, precision)
-            arithmetic = marker == 0xC9
-        elif marker == 0xC2:  # progressive DCT: the multi-scan decoder
-            return _decode_progressive(payload)
-        elif marker == 0xCA:  # SOF10: progressive arithmetic (round 11)
-            from .jpeg_arith import decode_arith_progressive
-
-            return decode_arith_progressive(payload)
-        elif marker == 0xCC:  # DAC: arithmetic conditioning
+                (self.huff_ac if tc else self.huff_dc)[th] = table
+        elif marker == _DAC:
             p = 0
             while p + 2 <= len(body):
-                tc, tb = body[p] >> 4, body[p] & 0x0F
-                cs = body[p + 1]
+                tc, tb, cs = body[p] >> 4, body[p] & 0x0F, body[p + 1]
                 p += 2
                 if tc == 0:
-                    conditioning[("dc", tb)] = (cs & 0x0F, cs >> 4)
+                    self.conditioning[("dc", tb)] = (cs & 0x0F, cs >> 4)
                 elif tc == 1:
-                    conditioning[("ac", tb)] = cs
+                    self.conditioning[("ac", tb)] = cs
                 else:
-                    return None
-        elif marker == 0xC3:  # SOF3: lossless predictive (round 12)
-            from .jpeg_lossless import decode_jpeg_lossless
-
-            got = decode_jpeg_lossless(payload)
-            if got is None:
-                return None
-            samples, precision = got
-            if precision >= 8:
-                px8 = (samples >> (precision - 8)).astype(np.uint8)
-            else:
-                px8 = (samples << (8 - precision)).astype(np.uint8)
-            nc3 = px8.shape[2]
-            if nc3 == 1:
-                return np.repeat(px8, 3, axis=2)
-            if nc3 == 3:  # lossless components carried as-is (RGB)
-                return px8
-            return None  # 2/4-component: no display mapping
-        elif 0xC5 <= marker <= 0xCF and marker not in (0xC8, 0xCC):
-            return None  # differential processes: unsupported
-        elif marker == 0xDD:  # DRI
-            restart_interval = int.from_bytes(body[0:2], "big")
-        elif marker == 0xDA:  # SOS
-            if frame is None:
-                return None
-            if arithmetic:
-                from .jpeg_arith import decode_arith_scan
-
-                return decode_arith_scan(
-                    payload,
-                    i + 2 + seg_len,
-                    body,
-                    frame,
-                    quant,
-                    conditioning,
-                    restart_interval,
-                )
-            return _decode_scan(
-                payload,
-                i + 2 + seg_len,
-                body,
-                frame,
-                quant,
-                huff_dc,
-                huff_ac,
-                restart_interval,
-            )
-        i += 2 + seg_len
-    return None
+                    return False
+        else:  # DRI
+            self.dri = int.from_bytes(body[0:2], "big")
+        return True
 
 
-def _decode_scan(
-    payload, data_pos, sos_body, frame, quant, huff_dc, huff_ac, dri
-):
+def _read_sof(body: bytes):
+    """A frame header (T.81 B.2.2): ``(height, width, comps,
+    precision)`` with comps ``[(id, h, v, tq), ...]``, or None when the
+    body is shorter than its component list or a dimension or the
+    component count is 0. Each process checks its own limits."""
+    if len(body) < 6:
+        return None
+    height = int.from_bytes(body[1:3], "big")
+    width = int.from_bytes(body[3:5], "big")
+    nc = body[5]
+    if not (height and width and nc) or len(body) < 6 + 3 * nc:
+        return None
+    comps = [
+        (body[6 + 3 * c], body[7 + 3 * c] >> 4, body[7 + 3 * c] & 0x0F,
+         body[8 + 3 * c])
+        for c in range(nc)
+    ]
+    return height, width, comps, body[0]
+
+
+def decode_jpeg_pixels(payload: bytes):
+    """JPEG pixel decode of every non-differential process: baseline
+    (SOF0), extended sequential (SOF1, 8/12-bit), progressive (SOF2),
+    lossless (SOF3), sequential arithmetic (SOF9, 8/12-bit) and
+    progressive arithmetic (SOF10). Returns numpy uint8 (height,
+    width, 3) RGB (12-bit and lossless samples keep their high 8
+    bits), or None when the payload is not decodable (wrong magic,
+    a differential process, structural corruption). TOTAL over
+    arbitrary bytes: any out-of-bounds segment access a crafted
+    truncation could reach is converted to the None contract here,
+    never an exception into the caller's Arrow batch."""
+    try:
+        return _decode_jpeg_pixels(payload)
+    except (IndexError, ValueError, TypeError, KeyError):
+        return None
+
+
+def _decode_jpeg_pixels(payload: bytes):
+    """One marker walk: tables up to the first frame header, whose
+    marker picks the process that carries the walk on from there."""
+    if len(payload) < 4 or payload[:2] != b"\xff\xd8":
+        return None
+    tables = _JpegTables()
+    seg = tables.walk(payload, 2)
+    if seg is None:
+        return None
+    marker = seg[0]
+    if marker == 0xC2:  # progressive Huffman
+        return _decode_progressive(
+            payload, seg, tables, _decode_progressive_scan,
+            (_DQT, _DHT, _DRI),
+        )
+    if marker == 0xCA:  # progressive arithmetic
+        from .jpeg_arith import decode_arith_progressive_scan
+
+        return _decode_progressive(
+            payload, seg, tables, decode_arith_progressive_scan,
+            (_DQT, _DAC, _DRI),
+        )
+    if marker == 0xC3:  # lossless predictive
+        from .jpeg_lossless import decode_lossless_rgb
+
+        return decode_lossless_rgb(payload, seg, tables)
+    # sequential DCT: SOF0 baseline (8-bit by spec), SOF1 extended
+    # (8/12-bit), SOF9 arithmetic (8/12-bit) -- only the entropy route
+    # and sample depth vary; a later sequential SOF replaces the frame
+    frame = None
+    while seg[0] in (0xC0, 0xC1, 0xC9):
+        sof_marker, body, end = seg
+        frame = _read_sof(body)
+        if (
+            frame is None
+            or frame[3] not in (8, 12)
+            or (frame[3] == 12 and sof_marker == 0xC0)
+            or len(frame[2]) not in (1, 3)
+        ):
+            return None
+        seg = tables.walk(payload, end)
+        if seg is None:
+            return None
+    marker, body, end = seg
+    if frame is None or marker != _SOS:
+        return None  # EOI, or another process's frame header
+    if sof_marker == 0xC9:
+        from .jpeg_arith import decode_arith_scan as scan
+    else:
+        scan = _decode_scan
+    return scan(payload, end, body, frame, tables)
+
+
+def _sampling(comps):
+    """``(hmax, vmax)`` of a frame's components, or None unless every
+    sampling factor is 1..4 (T.81 B.2.2) and divides the largest. A
+    factor of 0 beside a larger one is refused here, not divided by."""
+    if any(not (1 <= h <= 4 and 1 <= v <= 4) for _, h, v, _ in comps):
+        return None
+    hmax = max(h for _, h, _, _ in comps)
+    vmax = max(v for _, _, v, _ in comps)
+    if any(hmax % h or vmax % v for _, h, v, _ in comps):
+        return None
+    return hmax, vmax
+
+
+def _sequential_layout(sos_body, frame, quant):
+    """What a sequential scan needs before its entropy decode, for
+    either coder: ``(tables, hmax, vmax, mcus_x, mcus_y, planes)`` with
+    tables ``{comp id: (Td, Ta)}`` and one zeroed sample plane per
+    component. None unless the scan is one interleaved pass over every
+    component whose quant table is defined, within the sampling and
+    size limits."""
     import numpy as np
 
-    height, width, comps, precision = frame
-    shift = float(1 << (precision - 1))
-    maxv = (1 << precision) - 1
+    height, width, comps, _precision = frame
     ns = sos_body[0]
     if ns != len(comps):
         return None  # multi-scan files are progressive-ish: unsupported
@@ -435,10 +498,10 @@ def _decode_scan(
         cs = sos_body[1 + 2 * s]
         td, ta = sos_body[2 + 2 * s] >> 4, sos_body[2 + 2 * s] & 0x0F
         tables[cs] = (td, ta)
-    hmax = max(h for _, h, _, _ in comps)
-    vmax = max(v for _, _, v, _ in comps)
-    if hmax < 1 or vmax < 1 or hmax > 4 or vmax > 4:
+    sampling = _sampling(comps)
+    if sampling is None:
         return None
+    hmax, vmax = sampling
     mcus_x = -(-width // (8 * hmax))
     mcus_y = -(-height // (8 * vmax))
     # dims cap (PIL MAX_IMAGE_PIXELS pattern): a corrupt SOF claiming
@@ -446,19 +509,29 @@ def _decode_scan(
     # before the entropy decode ever touches the (tiny) scan data
     if mcus_x * mcus_y * 64 * hmax * vmax * len(comps) > 64_000_000:
         return None
-    basis = _dct_basis()
     planes = []
     for cid, h, v, tq in comps:
-        if (
-            cid not in tables
-            or tq not in quant
-            or tables[cid][0] not in huff_dc
-            or tables[cid][1] not in huff_ac
-            or hmax % h
-            or vmax % v
-        ):
+        if cid not in tables or tq not in quant:
             return None
         planes.append(np.zeros((mcus_y * v * 8, mcus_x * h * 8)))
+    return tables, hmax, vmax, mcus_x, mcus_y, planes
+
+
+def _decode_scan(payload, data_pos, sos_body, frame, tables):
+    """Sequential Huffman scan (SOF0/SOF1) to uint8 RGB, or None."""
+    layout = _sequential_layout(sos_body, frame, tables.quant)
+    if layout is None:
+        return None
+    scan_tables, hmax, vmax, mcus_x, mcus_y, planes = layout
+    comps, precision = frame[2], frame[3]
+    quant, huff_dc, huff_ac = tables.quant, tables.huff_dc, tables.huff_ac
+    dri = tables.dri
+    for cid, _h, _v, _tq in comps:
+        td, ta = scan_tables[cid]
+        if td not in huff_dc or ta not in huff_ac:
+            return None
+    shift = float(1 << (precision - 1))
+    basis = _dct_basis()
     reader = _BitReader(payload, data_pos)
     preds = [0] * len(comps)
     rst_idx = 0
@@ -471,17 +544,12 @@ def _decode_scan(
                 rst_idx = (rst_idx + 1) & 7
                 preds = [0] * len(comps)
             for ci, (cid, h, v, tq) in enumerate(comps):
-                td, ta = tables[cid]
+                td, ta = scan_tables[cid]
                 for by in range(v):
                     for bx in range(h):
                         block = _decode_block(
-                            reader,
-                            huff_dc[td],
-                            huff_ac[ta],
-                            quant[tq],
-                            preds,
-                            ci,
-                            precision,
+                            reader, huff_dc[td], huff_ac[ta], quant[tq],
+                            preds, ci, precision,
                         )
                         if block is None:
                             return None
@@ -490,18 +558,27 @@ def _decode_scan(
                         x0 = (mx * h + bx) * 8
                         planes[ci][y0 : y0 + 8, x0 : x0 + 8] = spatial
             mcu_count += 1
+    return _planes_to_rgb(planes, frame, hmax, vmax)
+
+
+def _planes_to_rgb(planes, frame, hmax, vmax):
+    """Decoded sample planes to uint8 RGB, shared by every DCT
+    process: replicate-upsample subsampled chroma, crop to the frame,
+    JFIF YCbCr -> RGB for 3 components. Samples deeper than 8 bits
+    keep their high 8 bits (the libjpeg scaled-output convention)."""
+    import numpy as np
+
+    height, width, comps, precision = frame
+    shift = float(1 << (precision - 1))
+    maxv = (1 << precision) - 1
     out = []
-    for ci, (cid, h, v, tq) in enumerate(comps):
-        p = planes[ci]
-        if h != hmax or v != vmax:  # replicate-upsample subsampled chroma
+    for p, (_cid, h, v, _tq) in zip(planes, comps):
+        if h != hmax or v != vmax:
             p = np.repeat(np.repeat(p, vmax // v, axis=0), hmax // h, axis=1)
         out.append(p[:height, :width])
     if len(out) == 1:
         g = np.clip(np.rint(out[0]), 0, maxv).astype(np.int64)
-        if precision > 8:
-            # the uint8 pixel contract: high bits carry (the libjpeg
-            # scaled-output convention)
-            g >>= precision - 8
+        g >>= precision - 8
         g = g.astype(np.uint8)
         return np.stack([g, g, g], axis=-1)
     y, cb, cr = out[0], out[1] - shift, out[2] - shift
@@ -511,8 +588,7 @@ def _decode_scan(
     rgb = np.clip(np.rint(np.stack([r, g, b], axis=-1)), 0, maxv).astype(
         np.int64
     )
-    if precision > 8:
-        rgb >>= precision - 8
+    rgb >>= precision - 8
     return rgb.astype(np.uint8)
 
 
@@ -746,10 +822,8 @@ def encode_jpeg(
 
 
 # ---------------------------------------------------------------------------
-# Progressive JPEG (SOF2, Huffman): the multi-scan decoder and the
-# matching scan-scripted encoder -- closing the codec's last remaining
-# format boundary (VERDICT r8 "what's missing" #3 tail; the honest
-# residue is now arithmetic-coded and 12-bit JPEG only).
+# Progressive JPEG: the multi-scan driver (SOF2 and SOF10), the SOF2
+# Huffman scan decoder and the matching scan-scripted encoder.
 #
 # Decode model (T.81 G.2): every scan REFINES a per-component DCT
 # coefficient store (zigzag index space, integer); spectral selection
@@ -769,142 +843,61 @@ def encode_jpeg(
 # ---------------------------------------------------------------------------
 
 
-def _decode_progressive(payload: bytes):
+def _decode_progressive(payload, seg, tables, scan, reads):
+    """The progressive driver shared by SOF2 (Huffman) and SOF10
+    (arithmetic): frame geometry and the coefficient store from the
+    SOF segment ``seg``, then every scan through ``scan`` -- the only
+    part the two processes do not share -- until EOI or the end of
+    the data, then the one assembly tail. ``reads`` names the table
+    segments the process parses."""
     import numpy as np
 
-    n = len(payload)
-    quant: dict[int, "np.ndarray"] = {}
-    huff_dc: dict[int, _HuffTable] = {}
-    huff_ac: dict[int, _HuffTable] = {}
-    frame = None
-    geom = None  # (hmax, vmax, mcus_x, mcus_y, per-comp block dims)
-    coefs: list = []  # per comp: int array (rows, cols, 64) zigzag space
-    dri = 0
-    saw_scan = False
-    i = 2
-    while i + 2 <= n:
-        if payload[i] != 0xFF:
-            return None
-        marker = payload[i + 1]
-        if marker == 0xFF:
-            i += 1
-            continue
-        if marker == 0x01 or 0xD0 <= marker <= 0xD8:
-            i += 2
-            continue
-        if marker == 0xD9:  # EOI: assemble
-            break
-        if i + 4 > n:
-            return None
-        seg_len = int.from_bytes(payload[i + 2 : i + 4], "big")
-        if seg_len < 2 or i + 2 + seg_len > n:
-            return None
-        body = payload[i + 4 : i + 2 + seg_len]
-        if marker == 0xDB:
-            p = 0
-            while p < len(body):
-                pq, tq = body[p] >> 4, body[p] & 0x0F
-                p += 1
-                if pq not in (0, 1) or tq > 3:
-                    return None
-                width = 2 if pq else 1
-                if p + 64 * width > len(body):
-                    return None
-                vals = [
-                    int.from_bytes(
-                        body[p + k * width : p + (k + 1) * width], "big"
-                    )
-                    for k in range(64)
-                ]
-                p += 64 * width
-                q = np.zeros((8, 8))
-                for k, (r, c) in enumerate(_ZIGZAG):
-                    q[r, c] = vals[k]
-                quant[tq] = q
-        elif marker == 0xC4:
-            p = 0
-            while p + 17 <= len(body):
-                tc, th = body[p] >> 4, body[p] & 0x0F
-                counts = list(body[p + 1 : p + 17])
-                total = sum(counts)
-                p += 17
-                if p + total > len(body):
-                    return None
-                table = _huff_table(counts, body[p : p + total])
-                p += total
-                if tc == 0:
-                    huff_dc[th] = table
-                elif tc == 1:
-                    huff_ac[th] = table
-                else:
-                    return None
-        elif marker == 0xC2:
-            if frame is not None or len(body) < 6 or body[0] != 8:
-                return None
-            height = int.from_bytes(body[1:3], "big")
-            width = int.from_bytes(body[3:5], "big")
-            nc = body[5]
-            if height <= 0 or width <= 0 or nc not in (1, 3):
-                return None
-            if len(body) < 6 + 3 * nc:
-                return None
-            comps = []
-            for c in range(nc):
-                cid = body[6 + 3 * c]
-                hv = body[7 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * c]))
-            hmax = max(h for _, h, _, _ in comps)
-            vmax = max(v for _, _, v, _ in comps)
-            if hmax < 1 or vmax < 1 or hmax > 4 or vmax > 4:
-                return None
-            if any(hmax % h or vmax % v for _, h, v, _ in comps):
-                return None
-            mcus_x = -(-width // (8 * hmax))
-            mcus_y = -(-height // (8 * vmax))
-            if mcus_x * mcus_y * 64 * hmax * vmax * nc > 64_000_000:
-                return None  # decode-bomb dims cap, as baseline
-            frame = (height, width, comps)
-            geom = (hmax, vmax, mcus_x, mcus_y)
-            coefs = [
-                np.zeros((mcus_y * v, mcus_x * h, 64), dtype=np.int64)
-                for _, h, v, _ in comps
-            ]
-        elif marker in (0xC0, 0xC1, 0xC3) or (
-            0xC5 <= marker <= 0xCF and marker not in (0xC8, 0xCC)
-        ):
-            return None  # mixed/other frame types inside a progressive file
-        elif marker == 0xDD:
-            dri = int.from_bytes(body[0:2], "big")
-        elif marker == 0xDA:
-            if frame is None:
-                return None
-            end_pos = _decode_progressive_scan(
-                payload, i + 2 + seg_len, body, frame, geom, coefs,
-                huff_dc, huff_ac, dri,
-            )
-            if end_pos is None:
-                return None
-            saw_scan = True
-            i = end_pos
-            continue
-        i += 2 + seg_len
-    if frame is None or not saw_scan:
+    _marker, body, end = seg
+    frame = _read_sof(body)
+    if frame is None or frame[3] != 8 or len(frame[2]) not in (1, 3):
         return None
-    return _assemble_from_coefs(frame, geom, coefs, quant)
+    height, width, comps, _precision = frame
+    sampling = _sampling(comps)
+    if sampling is None:
+        return None
+    hmax, vmax = sampling
+    mcus_x = -(-width // (8 * hmax))
+    mcus_y = -(-height // (8 * vmax))
+    if mcus_x * mcus_y * 64 * hmax * vmax * len(comps) > 64_000_000:
+        return None  # decode-bomb dims cap, as baseline
+    geom = (hmax, vmax, mcus_x, mcus_y)
+    # per component: int array (rows, cols, 64) in zigzag space
+    coefs = [
+        np.zeros((mcus_y * v, mcus_x * h, 64), dtype=np.int64)
+        for _, h, v, _ in comps
+    ]
+    saw_scan = False
+    while True:
+        seg = tables.walk(payload, end, reads)
+        if seg is None:
+            return None
+        marker, body, end = seg
+        if marker == _EOI:
+            break
+        if marker != _SOS:
+            return None  # a second frame header
+        end = scan(payload, end, body, frame, geom, coefs, tables)
+        if end is None:
+            return None
+        saw_scan = True
+    if not saw_scan:
+        return None
+    return _assemble_from_coefs(frame, geom, coefs, tables.quant)
 
 
-def _decode_progressive_scan(
-    payload, data_pos, sos_body, frame, geom, coefs, huff_dc, huff_ac, dri
-):
-    """Decode one scan into the coefficient store; returns the byte
-    position after the scan's entropy data (where the next marker
-    starts), or None on corruption."""
-    height, width, comps = frame
-    hmax, vmax, mcus_x, mcus_y = geom
+def _progressive_scan_header(sos_body, comps):
+    """A progressive SOS body (T.81 B.2.3 / G.1.1): ``(scan_comps, ss,
+    se, ah, al)`` with scan_comps ``[(comp index, Td, Ta), ...]``, or
+    None when it breaks the progressive scan rules."""
     ns = sos_body[0]
     if len(sos_body) != 1 + 2 * ns + 3 or not 1 <= ns <= len(comps):
         return None
-    scan_comps = []  # (ci, td, ta)
+    scan_comps = []
     for s in range(ns):
         cs = sos_body[1 + 2 * s]
         td, ta = sos_body[2 + 2 * s] >> 4, sos_body[2 + 2 * s] & 0x0F
@@ -918,13 +911,38 @@ def _decode_progressive_scan(
     ah, al = sos_body[3 + 2 * ns] >> 4, sos_body[3 + 2 * ns] & 0x0F
     if ss > se or se > 63 or al > 13 or ah > 13:
         return None
-    is_dc = ss == 0
-    if is_dc and se != 0:
+    if ss == 0 and se != 0:
         return None  # DC and AC never share a progressive scan
-    if not is_dc and ns != 1:
+    if ss != 0 and ns != 1:
         return None  # AC scans are single-component (T.81 G.1.1)
     if ah and ah != al + 1:
         return None  # successive approximation refines one bit at a time
+    return scan_comps, ss, se, ah, al
+
+
+def _component_blocks(height, width, h, v, hmax, vmax):
+    """(rows, cols) of one component's own block raster, the
+    non-interleaved scan geometry (T.81 A.2.2): its own sample grid,
+    NOT the MCU-padded one."""
+    comp_w = -(-(width * h) // hmax)
+    comp_h = -(-(height * v) // vmax)
+    return -(-comp_h // 8), -(-comp_w // 8)
+
+
+def _decode_progressive_scan(
+    payload, data_pos, sos_body, frame, geom, coefs, tables
+):
+    """Decode one Huffman scan into the coefficient store; returns the
+    byte position after the scan's entropy data (where the next marker
+    starts), or None on corruption."""
+    comps = frame[2]
+    mcus_x, mcus_y = geom[2:]
+    header = _progressive_scan_header(sos_body, comps)
+    if header is None:
+        return None
+    scan_comps, ss, se, ah, al = header
+    huff_dc, huff_ac, dri = tables.huff_dc, tables.huff_ac, tables.dri
+    is_dc = ss == 0
     reader = _BitReader(payload, data_pos)
     preds = [0] * len(comps)
     state = {"eobrun": 0}
@@ -942,7 +960,7 @@ def _decode_progressive_scan(
             state["eobrun"] = 0
         return True
 
-    if is_dc and ns > 1:  # interleaved DC scan: MCU order
+    if is_dc and len(scan_comps) > 1:  # interleaved DC scan: MCU order
         for _my in range(mcus_y):
             for _mx in range(mcus_x):
                 if not maybe_restart():
@@ -964,17 +982,10 @@ def _decode_progressive_scan(
     else:  # single-component scan: the component's own block raster
         ci, td, ta = scan_comps[0]
         _cid, h, v, _tq = comps[ci]
-        # non-interleaved geometry (T.81 A.2.2): the component's OWN
-        # sample grid, NOT the MCU-padded one
-        comp_w = -(-(width * h) // hmax)
-        comp_h = -(-(height * v) // vmax)
-        cols = -(-comp_w // 8)
-        rows = -(-comp_h // 8)
+        rows, cols = _component_blocks(frame[0], frame[1], h, v, *geom[:2])
         if is_dc and ah == 0 and td not in huff_dc:
             return None
-        if not is_dc and ah == 0 and ta not in huff_ac:
-            return None
-        if not is_dc and ah != 0 and ta not in huff_ac:
+        if not is_dc and ta not in huff_ac:
             return None
         for row in range(rows):
             for col in range(cols):
@@ -1118,13 +1129,12 @@ def _assemble_from_coefs(frame, geom, coefs, quant):
     and assemble RGB exactly like the baseline path."""
     import numpy as np
 
-    height, width, comps = frame
-    hmax, vmax, mcus_x, mcus_y = geom
+    comps = frame[2]
     basis = _dct_basis()
-    out = []
+    planes = []
     # zigzag index k -> flat spatial index r*8+c, for the bulk dezigzag
     zz_flat = np.array([r * 8 + c for (r, c) in _ZIGZAG])
-    for ci, (cid, h, v, tq) in enumerate(comps):
+    for ci, (_cid, _h, _v, tq) in enumerate(comps):
         if tq not in quant:
             return None
         q = quant[tq]
@@ -1139,21 +1149,10 @@ def _assemble_from_coefs(frame, geom, coefs, quant):
             np.matmul(np.matmul(basis.T, bf.reshape(rows, cols, 8, 8)), basis)
             + 128.0
         )
-        plane = spatial.transpose(0, 2, 1, 3).reshape(rows * 8, cols * 8)
-        if h != hmax or v != vmax:
-            plane = np.repeat(
-                np.repeat(plane, vmax // v, axis=0), hmax // h, axis=1
-            )
-        out.append(plane[:height, :width])
-    if len(out) == 1:
-        g = np.clip(np.rint(out[0]), 0, 255).astype(np.uint8)
-        return np.stack([g, g, g], axis=-1)
-    y, cb, cr = out[0], out[1] - 128.0, out[2] - 128.0
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    rgb = np.stack([r, g, b], axis=-1)
-    return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
+        planes.append(
+            spatial.transpose(0, 2, 1, 3).reshape(rows * 8, cols * 8)
+        )
+    return _planes_to_rgb(planes, frame, geom[0], geom[1])
 
 
 # ---------------------------------------------------------------------------
@@ -1406,10 +1405,7 @@ def _encode_progressive_scan(
     else:
         c = scan_comps[0]
         sh, sv = samplings[c]
-        comp_w = -(-(w * sh) // hmax)
-        comp_h = -(-(h * sv) // vmax)
-        cols = -(-comp_w // 8)
-        rows = -(-comp_h // 8)
+        rows, cols = _component_blocks(h, w, sh, sv, hmax, vmax)
         for row in range(rows):
             for col in range(cols):
                 restart_point()

@@ -48,7 +48,14 @@ dropped' to 'decoded').
 
 from __future__ import annotations
 
-from .jpeg import _ZIGZAG, _dct_basis
+from .jpeg import (
+    _ZIGZAG,
+    _component_blocks,
+    _dct_basis,
+    _planes_to_rgb,
+    _progressive_scan_header,
+    _sequential_layout,
+)
 
 # ---------------------------------------------------------------------------
 # Table D.3 -- Qe values and probability estimation state machine.
@@ -592,41 +599,21 @@ def encode_jpeg_arith(
     return bytes(out)
 
 
-def decode_arith_scan(
-    payload, data_pos, sos_body, frame, quant, conditioning, dri
-):
+def decode_arith_scan(payload, data_pos, sos_body, frame, tables):
     """Sequential-arithmetic scan decode: the _decode_scan loop with
-    the QM entropy layer. ``conditioning`` maps ('dc'|'ac', tbl) ->
-    (L, U) / Kx from the DAC segment (defaults otherwise). Returns the
-    assembled pixel array or None -- same contract as the Huffman
-    path."""
+    the QM entropy layer, conditioned by ``tables.conditioning`` (the
+    DAC segments; defaults otherwise). Returns the assembled pixel
+    array or None -- same contract as the Huffman path."""
     import numpy as np
 
-    height, width, comps, precision = frame
+    layout = _sequential_layout(sos_body, frame, tables.quant)
+    if layout is None:
+        return None
+    scan_tables, hmax, vmax, mcus_x, mcus_y, planes = layout
+    comps, precision = frame[2], frame[3]
+    quant, conditioning, dri = tables.quant, tables.conditioning, tables.dri
     shift = float(1 << (precision - 1))
-    maxv = (1 << precision) - 1
-    ns = sos_body[0]
-    if ns != len(comps):
-        return None
-    tables = {}
-    for s in range(ns):
-        cs = sos_body[1 + 2 * s]
-        td, ta = sos_body[2 + 2 * s] >> 4, sos_body[2 + 2 * s] & 0x0F
-        tables[cs] = (td, ta)
-    hmax = max(h for _, h, _, _ in comps)
-    vmax = max(v for _, _, v, _ in comps)
-    if hmax < 1 or vmax < 1 or hmax > 4 or vmax > 4:
-        return None
-    mcus_x = -(-width // (8 * hmax))
-    mcus_y = -(-height // (8 * vmax))
-    if mcus_x * mcus_y * 64 * hmax * vmax * len(comps) > 64_000_000:
-        return None
     basis = _dct_basis()
-    planes = []
-    for cid, h, v, tq in comps:
-        if cid not in tables or tq not in quant or hmax % h or vmax % v:
-            return None
-        planes.append(np.zeros((mcus_y * v * 8, mcus_x * h * 8)))
     dec = _ArithDecoder(payload, data_pos)
     stats = _Stats()
     preds = [0] * len(comps)
@@ -645,7 +632,7 @@ def decode_arith_scan(
                 preds = [0] * len(comps)
                 ctxs = [0] * len(comps)
             for ci, (cid, h, v, tq) in enumerate(comps):
-                td, ta = tables[cid]
+                td, ta = scan_tables[cid]
                 L, U = conditioning.get(("dc", td), (_DEF_L, _DEF_U))
                 K = conditioning.get(("ac", ta), _DEF_K)
                 for by in range(v):
@@ -668,30 +655,7 @@ def decode_arith_scan(
                         x0 = (mx * h + bx) * 8
                         planes[ci][y0 : y0 + 8, x0 : x0 + 8] = spatial
             mcu_count += 1
-    out = []
-    for ci, (cid, h, v, tq) in enumerate(comps):
-        p = planes[ci]
-        if h != hmax or v != vmax:
-            p = np.repeat(
-                np.repeat(p, vmax // v, axis=0), hmax // h, axis=1
-            )
-        out.append(p[:height, :width])
-    if len(out) == 1:
-        g = np.clip(np.rint(out[0]), 0, maxv).astype(np.int64)
-        if precision > 8:
-            g >>= precision - 8  # the uint8 pixel contract
-        g = g.astype(np.uint8)
-        return np.stack([g, g, g], axis=-1)
-    y, cb, cr = out[0], out[1] - shift, out[2] - shift
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    rgb = np.clip(np.rint(np.stack([r, g, b], axis=-1)), 0, maxv).astype(
-        np.int64
-    )
-    if precision > 8:
-        rgb >>= precision - 8
-    return rgb.astype(np.uint8)
+    return _planes_to_rgb(planes, frame, hmax, vmax)
 
 
 def _find_restart(payload, pos: int, rst_idx: int):
@@ -826,38 +790,19 @@ def _dec_prog_ac_refine(dec, stats, ta, blk, ss, se, al):
     return True
 
 
-def _decode_arith_progressive_scan(
-    payload, data_pos, sos_body, frame, geom, coefs, conditioning, dri
+def decode_arith_progressive_scan(
+    payload, data_pos, sos_body, frame, geom, coefs, tables
 ):
     """One SOF10 scan into the coefficient store; returns the position
     where the next marker starts, or None on corruption."""
-    height, width, comps = frame
-    hmax, vmax, mcus_x, mcus_y = geom
-    ns = sos_body[0]
-    if len(sos_body) != 1 + 2 * ns + 3 or not 1 <= ns <= len(comps):
+    comps = frame[2]
+    mcus_x, mcus_y = geom[2:]
+    header = _progressive_scan_header(sos_body, comps)
+    if header is None:
         return None
-    scan_comps = []
-    for s in range(ns):
-        cs = sos_body[1 + 2 * s]
-        td, ta = sos_body[2 + 2 * s] >> 4, sos_body[2 + 2 * s] & 0x0F
-        ci = next(
-            (k for k, (cid, _, _, _) in enumerate(comps) if cid == cs),
-            None,
-        )
-        if ci is None:
-            return None
-        scan_comps.append((ci, td, ta))
-    ss, se = sos_body[1 + 2 * ns], sos_body[2 + 2 * ns]
-    ah, al = sos_body[3 + 2 * ns] >> 4, sos_body[3 + 2 * ns] & 0x0F
-    if ss > se or se > 63 or al > 13 or ah > 13:
-        return None
+    scan_comps, ss, se, ah, al = header
+    conditioning, dri = tables.conditioning, tables.dri
     is_dc = ss == 0
-    if is_dc and se != 0:
-        return None
-    if not is_dc and ns != 1:
-        return None
-    if ah and ah != al + 1:
-        return None
     dec = _ArithDecoder(payload, data_pos)
     stats = _Stats()
     preds = [0] * len(comps)
@@ -879,7 +824,7 @@ def _decode_arith_progressive_scan(
                 ctxs[k] = 0
         return True
 
-    if is_dc and ns > 1:  # interleaved DC scan: MCU order
+    if is_dc and len(scan_comps) > 1:  # interleaved DC scan: MCU order
         for my in range(mcus_y):
             for mx in range(mcus_x):
                 if not maybe_restart():
@@ -902,10 +847,7 @@ def _decode_arith_progressive_scan(
     else:
         ci, td, ta = scan_comps[0]
         _cid, h, v, _tq = comps[ci]
-        comp_w = -(-(width * h) // hmax)
-        comp_h = -(-(height * v) // vmax)
-        cols = -(-comp_w // 8)
-        rows = -(-comp_h // 8)
+        rows, cols = _component_blocks(frame[0], frame[1], h, v, *geom[:2])
         L, U = conditioning.get(("dc", td), (_DEF_L, _DEF_U))
         K = conditioning.get(("ac", ta), _DEF_K)
         for row in range(rows):
@@ -934,128 +876,6 @@ def _decode_arith_progressive_scan(
                     return None
                 units += 1
     return _next_marker_pos(payload, dec.pos)
-
-
-def decode_arith_progressive(payload: bytes):
-    """Full SOF10 decode: marker walk collecting DQT/DAC/DRI, every
-    scan through its own fresh QM decoder + statistics into the
-    progressive coefficient store, assembled by the SHARED
-    jpeg._assemble_from_coefs tail. None for anything malformed --
-    the decode_jpeg_pixels contract."""
-    import numpy as np
-
-    from .jpeg import _assemble_from_coefs
-
-    n = len(payload)
-    quant: dict = {}
-    conditioning: dict = {}
-    frame = geom = None
-    coefs: list = []
-    dri = 0
-    saw_scan = False
-    i = 2
-    while i + 2 <= n:
-        if payload[i] != 0xFF:
-            return None
-        marker = payload[i + 1]
-        if marker == 0xFF:
-            i += 1
-            continue
-        if marker == 0x01 or 0xD0 <= marker <= 0xD8:
-            i += 2
-            continue
-        if marker == 0xD9:
-            break
-        if i + 4 > n:
-            return None
-        seg_len = int.from_bytes(payload[i + 2 : i + 4], "big")
-        if seg_len < 2 or i + 2 + seg_len > n:
-            return None
-        body = payload[i + 4 : i + 2 + seg_len]
-        if marker == 0xDB:
-            p = 0
-            while p < len(body):
-                pq, tq = body[p] >> 4, body[p] & 0x0F
-                p += 1
-                if pq not in (0, 1) or tq > 3:
-                    return None
-                width = 2 if pq else 1
-                if p + 64 * width > len(body):
-                    return None
-                vals = [
-                    int.from_bytes(
-                        body[p + k * width : p + (k + 1) * width], "big"
-                    )
-                    for k in range(64)
-                ]
-                p += 64 * width
-                q = np.zeros((8, 8))
-                for k, (r, c) in enumerate(_ZIGZAG):
-                    q[r, c] = vals[k]
-                quant[tq] = q
-        elif marker == 0xCC:  # DAC
-            p = 0
-            while p + 2 <= len(body):
-                tc, tb = body[p] >> 4, body[p] & 0x0F
-                cs = body[p + 1]
-                p += 2
-                if tc == 0:
-                    conditioning[("dc", tb)] = (cs & 0x0F, cs >> 4)
-                elif tc == 1:
-                    conditioning[("ac", tb)] = cs
-                else:
-                    return None
-        elif marker == 0xCA:  # SOF10
-            if frame is not None or len(body) < 6 or body[0] != 8:
-                return None
-            height = int.from_bytes(body[1:3], "big")
-            width = int.from_bytes(body[3:5], "big")
-            nc = body[5]
-            if height <= 0 or width <= 0 or nc not in (1, 3):
-                return None
-            if len(body) < 6 + 3 * nc:
-                return None
-            comps = []
-            for c in range(nc):
-                cid = body[6 + 3 * c]
-                hv = body[7 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * c]))
-            hmax = max(h for _, h, _, _ in comps)
-            vmax = max(v for _, _, v, _ in comps)
-            if hmax < 1 or vmax < 1 or hmax > 4 or vmax > 4:
-                return None
-            if any(hmax % h or vmax % v for _, h, v, _ in comps):
-                return None
-            mcus_x = -(-width // (8 * hmax))
-            mcus_y = -(-height // (8 * vmax))
-            if mcus_x * mcus_y * 64 * hmax * vmax * nc > 64_000_000:
-                return None
-            frame = (height, width, comps)
-            geom = (hmax, vmax, mcus_x, mcus_y)
-            coefs = [
-                np.zeros((mcus_y * v, mcus_x * h, 64), dtype=np.int64)
-                for _, h, v, _ in comps
-            ]
-        elif marker == 0xDD:
-            dri = int.from_bytes(body[0:2], "big")
-        elif 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            return None  # any other frame type inside a SOF10 file
-        elif marker == 0xDA:
-            if frame is None:
-                return None
-            end_pos = _decode_arith_progressive_scan(
-                payload, i + 2 + seg_len, body, frame, geom, coefs,
-                conditioning, dri,
-            )
-            if end_pos is None:
-                return None
-            saw_scan = True
-            i = end_pos
-            continue
-        i += 2 + seg_len
-    if frame is None or not saw_scan:
-        return None
-    return _assemble_from_coefs(frame, geom, coefs, quant)
 
 
 def _enc_prog_dc_first(enc, stats, td, ctxs, preds, ci, al, blk, L, U):
@@ -1280,10 +1100,7 @@ def _encode_arith_progressive_scan(
     else:
         ci = scan_comps[0]
         sh, sv = samplings[ci]
-        comp_w = -(-(w * sh) // hmax)
-        comp_h = -(-(h * sv) // vmax)
-        cols = -(-comp_w // 8)
-        rows = -(-comp_h // 8)
+        rows, cols = _component_blocks(h, w, sh, sv, hmax, vmax)
         for row in range(rows):
             for col in range(cols):
                 maybe_restart()

@@ -29,7 +29,18 @@ canonical-Huffman classes -- one entropy machine for the family."""
 
 from __future__ import annotations
 
-from .jpeg import _BitReader, _BitWriter, _HuffTable, _huff_table
+from .jpeg import (
+    _DHT,
+    _DRI,
+    _BitReader,
+    _BitWriter,
+    _JpegTables,
+    _huff_table,
+    _read_sof,
+)
+
+#: the table segments a lossless walk parses (no DQT: no quantization)
+_READS = (_DHT, _DRI)
 
 #: the lossless DHT: 17 magnitude categories (0..16), all length 5 --
 #: canonical assignment leaves the all-ones 5-bit code unused
@@ -141,82 +152,66 @@ def decode_jpeg_lossless(payload: bytes):
     components, structural corruption, truncated entropy data).
     TOTAL over arbitrary bytes."""
     try:
-        return _decode(payload)
+        if len(payload) < 4 or payload[:2] != b"\xff\xd8":
+            return None
+        tables = _JpegTables()
+        return _decode(payload, tables.walk(payload, 2, _READS), tables)
     except (IndexError, ValueError, TypeError, KeyError):
         return None
 
 
-def _decode(payload: bytes):
+def decode_lossless_rgb(payload, seg, tables):
+    """decode_jpeg_pixels' SOF3 branch: the walk from segment ``seg``
+    on, its samples as uint8 RGB (the high 8 bits; one component is
+    repeated, three are carried as-is), None for 2 or 4 components (no
+    display mapping)."""
     import numpy as np
 
-    n = len(payload)
-    if n < 4 or payload[:2] != b"\xff\xd8":
+    got = _decode(payload, seg, tables)
+    if got is None:
         return None
-    huff: dict[int, _HuffTable] = {}
+    samples, precision = got
+    if precision >= 8:
+        px8 = (samples >> (precision - 8)).astype(np.uint8)
+    else:
+        px8 = (samples << (8 - precision)).astype(np.uint8)
+    if px8.shape[2] == 1:
+        return np.repeat(px8, 3, axis=2)
+    return px8 if px8.shape[2] == 3 else None
+
+
+def _decode(payload, seg, tables):
+    """The SOF3 marker walk from segment ``seg`` on (the SOF3 header
+    itself when decode_jpeg_pixels dispatches here): decodes at the
+    first SOS after a lossless frame header."""
     frame = None
-    restart_interval = 0
-    i = 2
-    while i + 4 <= n:
-        if payload[i] != 0xFF:
-            return None
-        marker = payload[i + 1]
-        if marker == 0xFF:
-            i += 1
-            continue
-        if marker == 0x01 or 0xD0 <= marker <= 0xD8:
-            i += 2
-            continue
-        if marker == 0xD9:
-            return None
-        seg_len = int.from_bytes(payload[i + 2 : i + 4], "big")
-        if seg_len < 2 or i + 2 + seg_len > n:
-            return None
-        body = payload[i + 4 : i + 2 + seg_len]
+    while seg is not None:
+        marker, body, end = seg
         if marker == 0xC3:
-            precision = body[0]
-            if not (2 <= precision <= 16):
+            # lossless reads no Tq (no quantization): a header cut
+            # before the last, unused Tq byte still decodes
+            sof = _read_sof(body + b"\x00")
+            if sof is None:
                 return None
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            nc = body[5]
-            if h <= 0 or w <= 0 or not (1 <= nc <= 4):
+            h, w, comps, precision = sof
+            if not (2 <= precision <= 16) or len(comps) > 4:
                 return None
-            if h * w * nc > _MAX_PIXELS:
+            if h * w * len(comps) > _MAX_PIXELS:
                 return None
-            comps = []
-            for c in range(nc):
-                cid = body[6 + 3 * c]
-                hv = body[7 + 3 * c]
-                if hv != 0x11:
-                    return None  # subsampled lossless: counted boundary
-                comps.append(cid)
-            frame = (h, w, comps, precision)
-        elif marker == 0xC4:
-            p = 0
-            while p + 17 <= len(body):
-                tc, th = body[p] >> 4, body[p] & 0x0F
-                counts = list(body[p + 1 : p + 17])
-                total = sum(counts)
-                p += 17
-                if p + total > len(body):
-                    return None
-                if tc == 0:
-                    huff[th] = _huff_table(counts, body[p : p + total])
-                elif tc != 1:
-                    return None
-                p += total
-        elif marker == 0xDD:
-            restart_interval = int.from_bytes(body[0:2], "big")
+            if any((h_, v_) != (1, 1) for _, h_, v_, _ in comps):
+                return None  # subsampled lossless: counted boundary
+            frame = (h, w, [c[0] for c in comps], precision)
         elif marker == 0xDA:
             if frame is None:
                 return None
             return _decode_scan(
-                payload, i + 2 + seg_len, body, frame, huff,
-                restart_interval,
+                payload, end, body, frame, tables.huff_dc, tables.dri
             )
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC9, 0xCA):
-            return None  # a DCT process: not this decoder's stream
-        i += 2 + seg_len
+        elif marker in (0xC0, 0xC1, 0xC2, 0xC9, 0xCA, 0xD9):
+            return None  # EOI, or a DCT process: not this decoder's stream
+        # the lossless-arithmetic and differential frame headers are
+        # passed over, as this walk always has
+        seg = tables.walk(payload, end, _READS)
     return None
 
 

@@ -993,10 +993,7 @@ def decode_avi_frames(payload: bytes):
         if len(frames) + 1 > MAX_DECODE_FRAMES:
             return False
         if sub[:2] == b"\xff\xd8":
-            try:
-                px = decode_jpeg_pixels(sub)
-            except Exception:
-                return False
+            px = decode_jpeg_pixels(sub)
         elif len(sub) >= 4:
             # DIB: synthesize the BITMAPFILEHEADER the
             # AVI spec omits, then reuse the BMP decoder
@@ -1451,10 +1448,7 @@ def decode_mp4_frames(payload: bytes):
                 return None
             sub = bytes(payload[pos : pos + size])
             if fmt == b"jpeg":
-                try:
-                    px = decode_jpeg_pixels(sub)
-                except Exception:
-                    return None
+                px = decode_jpeg_pixels(sub)
             else:
                 if width <= 0 or height <= 0 or size != width * height * 3:
                     return None
@@ -1547,46 +1541,39 @@ MAX_DECODE_PIXELS = 64_000_000
 #: which shares MAX_DECODE_PIXELS across ALL frames of one payload).
 MAX_DECODE_FRAMES = 64
 
-#: JPEG frame-header (SOFn) markers: 0xC0-0xCF minus the three
-#: non-frame markers that share the range (DHT=C4, JPG=C8, DAC=CC).
-_JPEG_NON_SOF = {0xC4, 0xC8, 0xCC}
-
 
 def _jpeg_dims(payload: bytes) -> tuple[int, int] | None:
-    """Walk the JPEG marker-segment stream to the first SOFn frame
-    header and read its big-endian dims. Pure byte arithmetic (ITU
-    T.81 B.1.1.4): after the SOI magic, each segment is
-    0xFF <marker> <u16 len incl. itself>, standalone markers
-    (TEM/RSTn/SOI) carry no length, repeated 0xFF are fill bytes, and
-    the SOFn payload is [precision u8][height u16][width u16]. Returns
-    None on any structural violation -- text that merely starts with
-    the SOI bytes cannot false-positive past the marker walk."""
+    """Walk the JPEG marker-segment stream (jpeg._jpeg_segment) to the
+    first SOFn frame header and read its big-endian dims -- the SOFn
+    payload is [precision u8][height u16][width u16] (ITU T.81
+    B.2.2). Returns None on any structural violation, or at EOI / SOS
+    before any SOF -- text that merely starts with the SOI bytes
+    cannot false-positive past the marker walk."""
+    from .jpeg import _SOF_MARKERS, _jpeg_marker, _jpeg_segment
+
     n = len(payload)
     if n < 4 or payload[:2] != b"\xff\xd8":
         return None
     i = 2
-    while i + 4 <= n:
-        if payload[i] != 0xFF:
-            return None  # desynced: not a marker-aligned stream
-        marker = payload[i + 1]
-        if marker == 0xFF:  # fill byte
-            i += 1
-            continue
-        if marker == 0x01 or 0xD0 <= marker <= 0xD8:  # standalone
-            i += 2
-            continue
+    while (found := _jpeg_marker(payload, i)) is not None:
+        marker, at = found
         if marker in (0xD9, 0xDA):  # EOI / SOS before any SOF: give up
             return None
-        seg_len = int.from_bytes(payload[i + 2 : i + 4], "big")
-        if seg_len < 2:
+        seg = _jpeg_segment(payload, at)
+        if marker in _SOF_MARKERS and seg is None and at + 9 <= n:
+            # this probe needs only the SOF's first 5 body bytes, so it
+            # also takes one whose declared length runs past the payload
+            seg = _jpeg_segment(payload[at : at + 9] + bytes(0xFFFF), 0)
+        if seg is None:
             return None
-        if 0xC0 <= marker <= 0xCF and marker not in _JPEG_NON_SOF:
-            if i + 9 > n or seg_len < 7:
+        if marker in _SOF_MARKERS:
+            body = seg[1]
+            if len(body) < 5:
                 return None
-            height = int.from_bytes(payload[i + 5 : i + 7], "big")
-            width = int.from_bytes(payload[i + 7 : i + 9], "big")
+            height = int.from_bytes(body[1:3], "big")
+            width = int.from_bytes(body[3:5], "big")
             return (width, height) if width > 0 and height > 0 else None
-        i += 2 + seg_len
+        i = seg[2]
     return None
 
 
@@ -3002,49 +2989,43 @@ def jpeg_codec_class(payload: bytes) -> str | None:
     non-sequential arithmetic); None when the payload is not a JPEG
     marker stream. Header-only: no entropy decode, no pixel
     allocation."""
+    from .jpeg import _SOF_MARKERS, _jpeg_segment
+
     n = len(payload)
     if n < 4 or payload[:2] != b"\xff\xd8":
         return None
     i = 2
-    while i + 4 <= n:
-        if payload[i] != 0xFF:
-            return None
-        marker = payload[i + 1]
-        if marker == 0xFF:
-            i += 1
-            continue
-        if marker == 0x01 or 0xD0 <= marker <= 0xD8:
-            i += 2
-            continue
+    while (seg := _jpeg_segment(payload, i)) is not None:
+        marker, body, i = seg
         if marker in (0xD9, 0xDA):  # EOI / SOS before any SOF
             return None
-        seg_len = int.from_bytes(payload[i + 2 : i + 4], "big")
-        if seg_len < 2 or i + 2 + seg_len > n:
+        if marker not in _SOF_MARKERS:
+            continue
+        # the precision byte is read where the body starts, past an
+        # empty (length-2) body too, as this probe always has
+        start = i - len(body)
+        if start >= n:  # truncated SOF: no precision byte to read
             return None
-        if 0xC0 <= marker <= 0xCF and marker not in _JPEG_NON_SOF:
-            if i + 5 > n:  # truncated SOF: no precision byte to read
-                return None
-            precision = payload[i + 4]
-            # processes that decode at BOTH precisions (round 11:
-            # 12-bit rides SOF1/SOF9, its legal sequential carriers)
-            if marker in _JPEG_ARITH_SOFS:
-                if marker == 0xCA and precision == 12:
-                    return "twelve_bit"  # SOF10 decode is 8-bit-only
-                return "arithmetic"
-            if marker == 0xC1:
-                return "extended"
-            if marker == 0xC3:
-                # lossless predictive decodes at ANY precision 2..16
-                # (round 12: jpeg_lossless.py) -- never 'twelve_bit'
-                return "lossless"
-            if precision == 12:
-                return "twelve_bit"  # 12-bit on an 8-bit-only process
-            if marker == 0xC0:
-                return "baseline"
-            if marker == 0xC2:
-                return "progressive"
-            return "other"
-        i += 2 + seg_len
+        precision = payload[start]
+        # processes that decode at BOTH precisions (round 11:
+        # 12-bit rides SOF1/SOF9, its legal sequential carriers)
+        if marker in _JPEG_ARITH_SOFS:
+            if marker == 0xCA and precision == 12:
+                return "twelve_bit"  # SOF10 decode is 8-bit-only
+            return "arithmetic"
+        if marker == 0xC1:
+            return "extended"
+        if marker == 0xC3:
+            # lossless predictive decodes at ANY precision 2..16
+            # (round 12: jpeg_lossless.py) -- never 'twelve_bit'
+            return "lossless"
+        if precision == 12:
+            return "twelve_bit"  # 12-bit on an 8-bit-only process
+        if marker == 0xC0:
+            return "baseline"
+        if marker == 0xC2:
+            return "progressive"
+        return "other"
     return None
 
 
@@ -3065,30 +3046,21 @@ def _jpeg_sof0_offset(payload) -> int:
     can hit a coincidental FF C0 pair inside an earlier DQT/DHT table,
     and an unchecked -1 would rewrite the SOI). Raises ValueError when
     the stream has no SOF0 -- never a silent wrong offset."""
-    n = len(payload)
-    if n < 4 or bytes(payload[:2]) != b"\xff\xd8":
+    from .jpeg import _jpeg_marker, _jpeg_segment
+
+    if len(payload) < 4 or bytes(payload[:2]) != b"\xff\xd8":
         raise ValueError("not a JPEG marker stream")
     i = 2
-    while i + 2 <= n:
-        if payload[i] != 0xFF:
-            raise ValueError("JPEG marker walk desynced")
-        marker = payload[i + 1]
-        if marker == 0xFF:
-            i += 1
-            continue
-        if marker == 0x01 or 0xD0 <= marker <= 0xD8:
-            i += 2
-            continue
-        if marker in (0xD9, 0xDA):  # EOI / SOS: no SOF0 seen
-            break
+    while (found := _jpeg_marker(payload, i)) is not None:
+        marker, at = found
         if marker == 0xC0:
-            return i
-        if i + 4 > n:
+            # found before its length is read: the caller rewrites
+            # only the marker byte
+            return at
+        seg = _jpeg_segment(payload, at)
+        if seg is None or marker in (0xD9, 0xDA):  # EOI / SOS: no SOF0
             break
-        seg_len = int.from_bytes(bytes(payload[i + 2 : i + 4]), "big")
-        if seg_len < 2 or i + 2 + seg_len > n:
-            break
-        i += 2 + seg_len
+        i = seg[2]
     raise ValueError("no SOF0 segment in JPEG stream")
 
 

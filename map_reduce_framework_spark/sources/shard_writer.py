@@ -210,9 +210,16 @@ def _stage_shards(spark, documents: DataFrame, out_dir: str) -> str:
         "lang", "shard", "shard_file",
         "seq_id", "tok_offset", "doc_id", "n_tokens", "text",
     )
+    # the sort leads with the partitionBy columns: the writer's own
+    # per-partition sort then finds the rows already ordered and keeps
+    # (seq_id, tok_offset) order inside each shard file; sorting by
+    # (seq_id, tok_offset) alone, the writer re-sorted by the partition
+    # columns only and left row order to the shuffle's fetch order
     (
         rows.repartition("lang", "shard", "shard_file")
-        .sortWithinPartitions("seq_id", "tok_offset")
+        .sortWithinPartitions(
+            "lang", "shard", "shard_file", "seq_id", "tok_offset"
+        )
         .write.mode("overwrite")
         .partitionBy("lang", "shard", "shard_file")
         .parquet(os.path.join(staging, "data"))

@@ -8,7 +8,35 @@ import os
 import re
 from collections import Counter
 
+import pytest
+
 from map_reduce_framework_spark.__main__ import main
+
+
+@pytest.fixture(autouse=True)
+def _session_conf_restored(spark):
+    """``main`` builds its session with ``get_spark``, and
+    ``getOrCreate`` on the live test session applies the CLI's SQL confs
+    to it (``--n-reduce 3`` or ``SPARK_GRAFT_CPUS`` shuffle partitions).
+    Put back every runtime conf the test changed, so tests after this
+    file run at conftest's settings whatever their order. (Static keys
+    such as ``spark.master`` are echoed into the session's map too, but
+    the running context keeps its own and they cannot be reset.)"""
+
+    def runtime_confs():
+        return {
+            k: v for k, v in spark.conf.getAll.items()
+            if spark.conf.isModifiable(k)
+        }
+
+    before = runtime_confs()
+    yield
+    for key, value in runtime_confs().items():
+        if key not in before:
+            spark.conf.unset(key)
+        elif value != before[key]:
+            spark.conf.set(key, before[key])
+    assert runtime_confs() == before
 
 
 def test_cli_wc_end_to_end(spark, tmp_path):

@@ -139,6 +139,15 @@ def test_decoders_never_raise_on_malformed_input():
     from map_reduce_framework_spark.operators.jpeg import (
         decode_jpeg_pixels,
         encode_jpeg,
+        encode_jpeg_progressive,
+    )
+    from map_reduce_framework_spark.operators.jpeg_arith import (
+        encode_jpeg_arith,
+        encode_jpeg_arith_progressive,
+    )
+    from map_reduce_framework_spark.operators.jpeg_lossless import (
+        decode_jpeg_lossless,
+        encode_jpeg_lossless,
     )
     from map_reduce_framework_spark.operators.multimodal import (
         decode_bmp_pixels,
@@ -153,6 +162,7 @@ def test_decoders_never_raise_on_malformed_input():
     decoders = [
         decode_gif_frames, decode_gif_pixels, decode_png_pixels,
         decode_bmp_pixels, decode_wav, decode_jpeg_pixels,
+        decode_jpeg_lossless,
     ]
     payloads = []
     for _ in range(150):
@@ -167,11 +177,20 @@ def test_decoders_never_raise_on_malformed_input():
                       for _ in range(rng.choice([0, 5, 50, 500])))
         )
     g = np.arange(64, dtype=np.uint8).reshape(8, 8)
+    rgb = np.stack([g, g[::-1], g.T], -1)
     valids = [
         encode_gif([g, g]),
         encode_bmp(np.stack([g, g, g], -1)),
         encode_wav(list(range(-50, 50))),
         encode_jpeg(g),
+        # every other JPEG process the package decodes, each walked by
+        # the shared marker reader: color so a mutated sampling factor
+        # can sit beside an intact one
+        encode_jpeg_progressive(rgb, restart_interval=1),
+        encode_jpeg_arith(rgb, restart_interval=1),
+        encode_jpeg_arith_progressive(rgb),
+        encode_jpeg_lossless(rgb),
+        encode_jpeg(g.astype(np.int64) * 64, precision=12),
     ]
     for v in valids:
         for cut in range(0, len(v), max(1, len(v) // 40)):
@@ -184,6 +203,35 @@ def test_decoders_never_raise_on_malformed_input():
     for p in payloads:
         for d in decoders:
             d(p)  # must not raise; None or a valid decode both fine
+
+
+def test_jpeg_zero_sampling_factor_is_none():
+    """A color frame header with a sampling factor of 0 beside an
+    intact one decodes to None on every DCT process (it used to raise
+    ZeroDivisionError out of decode_jpeg_pixels)."""
+    from map_reduce_framework_spark.operators.jpeg import (
+        encode_jpeg_progressive,
+    )
+    from map_reduce_framework_spark.operators.jpeg_arith import (
+        encode_jpeg_arith,
+        encode_jpeg_arith_progressive,
+    )
+
+    rgb = np.stack([np.arange(64, dtype=np.uint8).reshape(8, 8)] * 3, -1)
+    rgb[:, :, 1] //= 2
+    for enc in (
+        encode_jpeg, encode_jpeg_progressive, encode_jpeg_arith,
+        encode_jpeg_arith_progressive,
+    ):
+        p = bytearray(enc(rgb))
+        sof = next(
+            i for i in range(2, len(p) - 1)
+            if p[i] == 0xFF and p[i + 1] in (0xC0, 0xC2, 0xC9, 0xCA)
+        )
+        assert decode_jpeg_pixels(bytes(p)) is not None
+        for hv in (0x01, 0x10, 0x00):
+            p[sof + 4 + 6 + 3 + 1] = hv  # second component's H/V byte
+            assert decode_jpeg_pixels(bytes(p)) is None
 
 
 def test_decoders_refuse_decompression_bombs():
@@ -223,3 +271,100 @@ def test_decoders_refuse_decompression_bombs():
            + chunk(b"IDAT", zlib.compress(b"\x00" * 200_000))
            + chunk(b"IEND", b""))
     assert decode_png_pixels(png) is None
+
+
+def _jpeg_process_corpus():
+    """One fixed 16x16 image encoded by every JPEG process the package
+    writes, each followed by its every-1/60th prefixes, its header
+    segments with a bad length field and 150 seeded 1-5 byte
+    mutations: the inputs the marker-walk digest is taken over."""
+    import random
+
+    from map_reduce_framework_spark.operators.jpeg import (
+        encode_jpeg_progressive,
+    )
+    from map_reduce_framework_spark.operators.jpeg_arith import (
+        encode_jpeg_arith,
+        encode_jpeg_arith_progressive,
+    )
+    from map_reduce_framework_spark.operators.jpeg_lossless import (
+        encode_jpeg_lossless,
+    )
+
+    img_rng = np.random.default_rng(7)
+    rgb = img_rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
+    gray = rgb[:, :, 0]
+    gray12 = img_rng.integers(0, 4096, (16, 16)).astype(np.int64)
+    encodings = [
+        encode_jpeg(gray),
+        encode_jpeg(rgb),
+        encode_jpeg(rgb, subsample_420=True, restart_interval=2),
+        encode_jpeg(gray12, precision=12),
+        encode_jpeg_progressive(rgb),
+        encode_jpeg_progressive(rgb, subsample_420=True, restart_interval=2),
+        encode_jpeg_arith(rgb),
+        encode_jpeg_arith(rgb, restart_interval=2),
+        encode_jpeg_arith(gray12, precision=12),
+        encode_jpeg_arith_progressive(rgb),
+        encode_jpeg_arith_progressive(
+            rgb, subsample_420=True, restart_interval=2
+        ),
+        encode_jpeg_lossless(rgb, precision=8),
+        encode_jpeg_lossless(gray12, precision=12, point_transform=1),
+    ]
+    payloads = []
+    for seed, v in enumerate(encodings):
+        payloads.append(v)
+        for cut in range(0, len(v), max(1, len(v) // 60)):
+            payloads.append(v[:cut])
+        # each header segment's length field set below the minimum of 2
+        # and past the payload: random mutations rarely hit these bytes
+        i = 2
+        while v[i + 1] != 0xDA:
+            for bad in (0, 1, len(v)):
+                b = bytearray(v)
+                b[i + 2 : i + 4] = bad.to_bytes(2, "big")
+                payloads.append(bytes(b))
+            i += 2 + int.from_bytes(v[i + 2 : i + 4], "big")
+        rng = random.Random(seed)
+        for _ in range(150):
+            b = bytearray(v)
+            for _ in range(rng.randrange(1, 6)):
+                b[rng.randrange(len(b))] = rng.randrange(256)
+            payloads.append(bytes(b))
+    return payloads
+
+
+#: sha256 over every corpus payload of what decode_jpeg_pixels,
+#: _jpeg_dims, jpeg_codec_class and _jpeg_sof0_offset return, recorded
+#: on the seven hand-written marker walkers the shared segment reader
+#: replaced: the reader must give every caller the same answer on
+#: valid, truncated and corrupted streams alike.
+JPEG_MARKER_WALK_DIGEST = (
+    "5e25e70866811c6b84bbf42f5534a2f669902739c57ea33087f85751803a3228"
+)
+
+
+def test_jpeg_marker_walk_digest():
+    import hashlib
+
+    from map_reduce_framework_spark.operators.multimodal import (
+        _jpeg_dims,
+        _jpeg_sof0_offset,
+        jpeg_codec_class,
+    )
+
+    h = hashlib.sha256()
+    for p in _jpeg_process_corpus():
+        px = decode_jpeg_pixels(p)
+        if px is None:
+            h.update(b"none;")
+        else:
+            h.update(repr((px.shape, px.dtype.str)).encode())
+            h.update(hashlib.sha256(px.tobytes()).digest())
+        try:
+            sof0 = _jpeg_sof0_offset(p)
+        except ValueError:
+            sof0 = "ValueError"
+        h.update(repr((_jpeg_dims(p), jpeg_codec_class(p), sof0)).encode())
+    assert h.hexdigest() == JPEG_MARKER_WALK_DIGEST
