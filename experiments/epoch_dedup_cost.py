@@ -95,16 +95,9 @@ def run_mode(spark, docs, fanout: int, retain: int | None = None) -> list[dict]:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from map_reduce_framework_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName("epoch-dedup-cost")
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("epoch-dedup-cost", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")

@@ -25,23 +25,8 @@ REPS = 4
 _CHILD = r"""
 import json, os, sys, time
 sys.path.insert(0, %(repo)r)
-from pyspark.sql import SparkSession
-cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-spark = (
-    SparkSession.builder.appName("isolated")
-    .master(f"local[{cpus}]")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-    .getOrCreate()
-)
+from map_reduce_framework_spark.session import get_spark
+spark = get_spark("isolated")
 spark.sparkContext.setLogLevel("ERROR")
 from map_reduce_framework_spark import registry
 spark.range(1_000_000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()

@@ -27,16 +27,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from map_reduce_framework_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName("langid-dim-scale")
-        .master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("langid-dim-scale", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     from map_reduce_framework_spark.operators import langid

@@ -88,16 +88,9 @@ EXECUTES_ON_BUILD = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from map_reduce_framework_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName("plan-inventory")
-        .master("local[8]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("plan-inventory", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     from map_reduce_framework_spark import registry
 

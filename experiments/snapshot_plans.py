@@ -28,25 +28,10 @@ def main() -> None:
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    os.environ["SPARK_GRAFT_CPUS"] = str(args.cpus)  # get_spark's master
+    from map_reduce_framework_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName("snapshot-plans")
-        .master(f"local[{args.cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    spark = get_spark("snapshot-plans", shuffle_partitions=int(args.cpus))
     spark.sparkContext.setLogLevel("ERROR")
     from map_reduce_framework_spark import registry
 

@@ -35,23 +35,14 @@ import textwrap
 
 JOB = """
 import time, sys
-from pyspark.sql import SparkSession
 from pyspark import TaskContext
+from map_reduce_framework_spark.session import get_spark
 
-speculate = sys.argv[1] == "on"
-builder = (
-    SparkSession.builder.master("local[8]")
-    .appName("speculation-demo")
-    .config("spark.ui.enabled", "false")
+spark = get_spark(
+    "speculation-demo",
+    speculation=sys.argv[1] == "on",
+    extra_conf={"spark.speculation.interval": "100ms"},
 )
-if speculate:
-    builder = (
-        builder.config("spark.speculation", "true")
-        .config("spark.speculation.interval", "100ms")
-        .config("spark.speculation.quantile", "0.8")
-        .config("spark.speculation.multiplier", "1.5")
-    )
-spark = builder.getOrCreate()
 sc = spark.sparkContext
 sc.setLogLevel("ERROR")
 

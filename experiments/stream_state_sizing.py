@@ -32,19 +32,11 @@ REPS = 2
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
+    from map_reduce_framework_spark.session import get_spark
     from map_reduce_framework_spark.streaming import ops
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("stream-state-sizing")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("stream-state-sizing")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(10).count()  # session warmup
 

@@ -36,17 +36,11 @@ def snapshot(spark: SparkSession) -> DataFrame:
         ),
         ("aqe_enabled", str(spark.conf.get("spark.sql.adaptive.enabled", ""))),
     ]
-    try:
-        tracker = sc.statusTracker()
-        rows.append(("active_jobs", str(len(tracker.getActiveJobsIds()))))
-        rows.append(("active_stages", str(len(tracker.getActiveStageIds()))))
-    except Exception:
-        pass  # tracker API drift: metrics are best-effort by design
-    try:
-        execs = sc._jsc.sc().statusTracker().getExecutorInfos()
-        rows.append(("executors", str(len(execs))))
-    except Exception:
-        pass
+    tracker = sc.statusTracker()
+    rows.append(("active_jobs", str(len(tracker.getActiveJobsIds()))))
+    rows.append(("active_stages", str(len(tracker.getActiveStageIds()))))
+    execs = sc._jsc.sc().statusTracker().getExecutorInfos()
+    rows.append(("executors", str(len(execs))))
     return spark.createDataFrame(rows, "metric string, value string")
 
 

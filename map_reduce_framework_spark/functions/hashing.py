@@ -28,8 +28,3 @@ def md5_long(col: Column, seed: int | Column = 0, bits: int = 60) -> Column:
     h = F.md5(F.concat(seed_col, F.lit(":"), col.cast("string")))
     return F.conv(F.substring(h, 1, hexchars), 16, 10).cast("bigint")
 
-
-def minhash_value(token_col: Column, seed: int) -> Column:
-    """One minhash component: min over a group of md5_long(token, seed).
-    Use inside groupBy().agg(F.min(...)); see operators/dedup.py."""
-    return md5_long(token_col, seed)

@@ -25,27 +25,6 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Dot product for a *known* dimension, expanded to a flat left-assoc
-    sum ``a[0]*b[0] + ... + a[dim-1]*b[dim-1]``.
-
-    Bit-identical to :func:`dot` (a fold from 0.0 sums in the same order)
-    but stays inside whole-stage codegen instead of interpreting a
-    higher-order lambda per element -- the hot path for pairwise cosine.
-
-    ``a``/``b`` should be array<float> columns (or cheap attribute refs):
-    elements are cast float->double individually, which equals casting the
-    whole array first (same IEEE widening per element) WITHOUT inlining an
-    array-level cast into all ``dim`` getItems when Catalyst collapses
-    projections (that inlining made the expanded form 64x slower than the
-    HOF it replaced).
-    """
-    out = a.getItem(0).cast("double") * b.getItem(0).cast("double")
-    for i in range(1, dim):
-        out = out + a.getItem(i).cast("double") * b.getItem(i).cast("double")
-    return out
-
-
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 

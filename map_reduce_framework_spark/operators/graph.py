@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import stage_checkpoint
+from ..session import fixpoint, stage_checkpoint
 from .skew import salted_aggregate
 
 PR_ITERS = 3
@@ -358,77 +358,65 @@ ORACLE_SQL: dict[str, str] = {
 # k is ADAPTIVE -- one plus the 5th-percentile degree of the full graph
 # -- so the operator does real multi-round peeling at every SF instead
 # of hardcoding a threshold the data outgrows. Each round is one
-# degree aggregate + two semi-joins on a shrinking edge set; real
-# graphs converge in a handful of rounds (measured: 5 at sf0.01), and
-# the DuckDB oracle unrolls KCORE_ORACLE_ROUNDS idempotent rounds (a
-# converged round is a no-op, so any round count >= the fixpoint is
-# exact). The loop-control scalars (k, per-round edge count) are the
-# audited K-scalar driver collects, same category as the CC round count.
+# degree aggregate + two semi-joins on a shrinking edge set, run by
+# session.fixpoint, which stops on the first round whose edges all have
+# degree >= k (measured: 5 rounds at sf0.01). The DuckDB oracle unrolls
+# KCORE_ORACLE_ROUNDS idempotent rounds (a converged round is a no-op,
+# so any round count >= the fixpoint is exact). The loop-control
+# scalars (k, the per-round stop test) are the audited K-scalar driver
+# collects, same category as the CC round count.
 # ---------------------------------------------------------------------------
 
 KCORE_PCT = 0.05
 KCORE_ORACLE_ROUNDS = 10
 
 
+def _degrees(edges: DataFrame) -> DataFrame:
+    return edges.groupBy("src").agg(F.count("*").alias("deg"))
+
+
+def _kcore_peel(edges: DataFrame, k: int) -> DataFrame:
+    """One peeling round: keep the edges whose ends both have degree
+    >= k in ``edges``."""
+    keep = _degrees(edges).filter(F.col("deg") >= k).select("src")
+    return (
+        edges.join(keep, "src")
+        .join(keep.withColumnRenamed("src", "dst"), "dst")
+        .select("src", "dst")
+    )
+
+
+def _kcore_done(edges: DataFrame, k: int) -> bool:
+    """True iff every vertex of ``edges`` has degree >= k, which on a
+    symmetric edge set is exactly when ``_kcore_peel`` keeps them all."""
+    return _degrees(edges).filter(F.col("deg") < k).isEmpty()
+
+
 def part_kcore(lineitem: DataFrame) -> DataFrame:
     """(part, core_degree, k): the vertices of the copurchase graph's
     adaptive k-core with their degree inside the core. Peeling runs to
     an exact fixpoint; every arithmetic step is integer."""
-    # checkpoint BEFORE the percentile pass: k's degree aggregate and
-    # round 0 otherwise each rebuild the market-basket self-join.
-    edges = stage_checkpoint(part_copurchase_edges(lineitem), eager=True)
-    deg0 = edges.groupBy("src").agg(F.count("*").alias("deg"))
+    # lazy: k's percentile pass materializes it, and round 1 reads it
+    # instead of rebuilding the market-basket self-join
+    edges = stage_checkpoint(part_copurchase_edges(lineitem))
     k = int(
-        deg0.agg(
+        _degrees(edges)
+        .agg(
             (
                 F.floor(F.expr(f"percentile(deg, {KCORE_PCT})"))
                 .cast("bigint")
                 + F.lit(1)
             ).alias("k")
-        ).collect()[0]["k"]
+        )
+        .collect()[0]["k"]
     )
-
-    # checkpoint (not persist) each round: an iterative self-
-    # referencing join grows the LOGICAL plan exponentially even when
-    # the data is cached, and Catalyst re-optimizes the whole lineage
-    # every round -- measured 1.5s/round degrading to 40s/round by
-    # round 5 without truncation. stage_checkpoint picks reliable
-    # checkpoint() when SparkContext has a checkpoint dir (cluster:
-    # survives executor loss mid-peel) and localCheckpoint() otherwise.
-    cur = edges
-    n_edges = cur.count()
-    while True:
-        keep = (
-            cur.groupBy("src")
-            .agg(F.count("*").alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select(F.col("src").alias("v"))
-        )
-        nxt = (
-            cur.join(keep.withColumnRenamed("v", "src"), "src")
-            .join(
-                keep.withColumnRenamed("v", "dst"),
-                "dst",
-            )
-            .select("src", "dst")
-        )
-        # lazy: the count() below materializes the checkpoint, so
-        # eager=True would just spend an extra job per round
-        nxt = stage_checkpoint(nxt)
-        n_next = nxt.count()
-        cur = nxt
-        if n_next == n_edges:
-            break
-        n_edges = n_next
-
-    return (
-        cur.groupBy("src")
-        .agg(F.count("*").alias("core_degree"))
-        .select(
-            F.col("src").alias("part"),
-            F.col("core_degree").cast("bigint").alias("core_degree"),
-            F.lit(k).cast("bigint").alias("k"),
-        )
+    core = fixpoint(
+        edges, lambda e: _kcore_peel(e, k), lambda e: _kcore_done(e, k)
+    )
+    return _degrees(core).select(
+        F.col("src").alias("part"),
+        F.col("deg").cast("bigint").alias("core_degree"),
+        F.lit(k).cast("bigint").alias("k"),
     )
 
 

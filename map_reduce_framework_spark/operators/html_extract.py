@@ -203,14 +203,6 @@ def synth_html_expr() -> str:
     )
 
 
-def expected_extracted_expr() -> str:
-    """What extraction must return on the crafted page: the document
-    text byte-exactly, then the decoded summary line (dialect-shared;
-    used by tests, not by the operators). _SUMMARY_LINE contains no
-    single quotes, so it embeds in the SQL literal as-is."""
-    return f"CONCAT(text, '{_NL}', '{_SUMMARY_LINE}')"
-
-
 def html_corpus(documents: DataFrame) -> DataFrame:
     """(doc_id, html): the crafted corpus -- also the general entry
     point for running the extractor over REAL pages (any DataFrame

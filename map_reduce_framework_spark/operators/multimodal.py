@@ -3272,16 +3272,6 @@ def _wav_fmt_tag_offset(payload) -> int:
     raise ValueError("no fmt chunk")
 
 
-def wav_format_tag(payload) -> int | None:
-    """WAVE format tag (1 = PCM, 3 = IEEE float, 0x55 = MP3, ...) --
-    header walk only; None when not a RIFF/WAVE stream."""
-    try:
-        off = _wav_fmt_tag_offset(payload)
-    except ValueError:
-        return None
-    return int.from_bytes(payload[off : off + 2], "little")
-
-
 def wav_fmt_fields(payload) -> tuple | None:
     """(format_tag, bits_per_sample) from the fmt chunk -- bits is None
     when the chunk is shorter than the 16-byte PCM layout. Header walk

@@ -3323,10 +3323,13 @@ def quality_classifier_train_trace(
                 "yq", *[f"xq{j}" for j in range(6)], pq.alias("pq"),
                 nll.alias("nllq"),
             )
+            # DECIMAL(38,0), as in langid_train_trace: a per-row term
+            # reaches ~1e12, so a BIGINT sum passes 2^63 at ~1e7 docs
             agg = scored.agg(
                 *[
                     F.sum(
-                        (F.col("pq") - F.col("yq")) * F.col(f"xq{j}")
+                        (F.col("pq") - F.col("yq")).cast("decimal(38,0)")
+                        * F.col(f"xq{j}")
                     ).alias(f"g{j}")
                     for j in range(6)
                 ],

@@ -128,7 +128,10 @@ def stage_checkpoint(df, *, eager: bool = False):
     1.5 s -> 40 s/round by round 5 of k-core without truncation).
     ``eager=False`` defers materialization to the first action that
     touches the result, avoiding one wasted job when the caller's next
-    step is a count() anyway.
+    step is a count() anyway. Under AQE the lazy call is not free: it
+    plans the relation adaptively, which runs every shuffle map stage
+    below it at call time (one SQL execution and one job for a
+    ``groupBy``); the first action then runs only the final stage.
 
     Cleanup: Spark leaves reliable checkpoint files on disk by default
     (``spark.cleaner.referenceTracking.cleanCheckpoints`` is false), so
@@ -141,6 +144,23 @@ def stage_checkpoint(df, *, eager: bool = False):
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    done: Callable[[DataFrame], bool],
+) -> DataFrame:
+    """Set ``state = stage_checkpoint(step(state))`` until ``done(state)``.
+
+    ``done`` runs exactly one action, which also materializes the lazy
+    checkpoint, so a round costs two SQL executions. It may be true only
+    when ``step(state)`` would give back ``state``: the loop then ends on
+    the round that reaches the fixpoint, not one round later."""
+    while True:
+        state = stage_checkpoint(step(state))
+        if done(state):
+            return state
 
 
 def materialize_parallel(

@@ -2,7 +2,8 @@
 and the large-star/small-star (Kiveris et al. SoCC'14) implementations must
 produce the exact min-id component labeling of a union-find oracle, on
 random graphs across densities and on adversarial shapes (long chains --
-the diameter case two-phase exists for -- stars, and disjoint pairs)."""
+the diameter case two-phase exists for -- stars, disjoint pairs, an
+empty graph and self-loops)."""
 
 from __future__ import annotations
 
@@ -43,6 +44,12 @@ def _graphs() -> list[tuple[str, list[tuple[int, int]]]]:
         ("pairs", [(2 * i, 2 * i + 1) for i in range(20)]),
         ("two_chains_bridge", [(i, i + 1) for i in range(15)]
          + [(100 + i, 101 + i) for i in range(15)] + [(7, 107)]),
+        ("empty", []),
+        ("self_loops", [(1, 1), (2, 2), (3, 3)]),
+        ("loops_on_chain", [(i, i + 1) for i in range(5)] + [(0, 0), (3, 3)]),
+        # no v is also a u, but u = 5 has two edges: not a star forest
+        ("two_edge_fan", [(5, 1), (5, 2)]),
+        ("already_star", [(i, 0) for i in range(1, 10)]),
     ]
     for seed, n, m in [(1, 50, 30), (2, 50, 80), (3, 120, 60), (4, 30, 200)]:
         rng = random.Random(seed)

@@ -275,5 +275,7 @@ def test_metrics_snapshot_and_timing():
     assert snap["spark_version"].startswith("4.")
     assert int(snap["default_parallelism"]) >= 1
     assert snap["aqe_enabled"] == "true"
+    assert int(snap["active_jobs"]) >= 0 and int(snap["active_stages"]) >= 0
+    assert int(snap["executors"]) >= 1  # local mode: the driver's own
     timing = metrics.time_query(spark.range(1000))
     assert timing["rows"] == 1000.0 and timing["wall_s"] > 0

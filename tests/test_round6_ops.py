@@ -909,6 +909,32 @@ def test_quality_classifier_trainer_learns_planted_signal(spark):
     assert got[0][0] and got[1][0] is False
 
 
+def test_quality_classifier_gradient_sum_does_not_overflow(spark, monkeypatch):
+    """Two rows whose gradient terms (pq - yq) * xq0 are 5e18 each: the
+    sum, 1e19, is past 2^63. The trainer must return the weights that
+    exact Python integers give, not raise ARITHMETIC_OVERFLOW (ANSI) or
+    wrap."""
+    import math
+
+    from map_reduce_framework_spark.operators import text_analysis as ta
+
+    S = ta.DSIR_SCALE
+    x = [[10**13, 7, 0, 0, 0, 0], [10**13, 3, 0, 0, 0, 0]]
+    feats = spark.createDataFrame(
+        [(d, 0, *xs) for d, xs in enumerate(x)],
+        "doc_id long, yq long, "
+        + ", ".join(f"xq{j} long" for j in range(6)),
+    )
+    monkeypatch.setattr(ta, "_qct_features", lambda documents: feats)
+
+    pq = math.floor(S / 2.0 + 0.5)  # w = 0 gives z = 0
+    g = [sum(pq * xs[j] for xs in x) for j in range(6)]
+    assert g[0] > 2**63
+    want = [-math.floor(float(gj) * ta.QCT_LR / (2 * 1e6) + 0.5) for gj in g]
+    _rows, w_q = ta.quality_classifier_train_trace(feats, iters=1)
+    assert w_q == want
+
+
 # ---------------------------------------------------------------------------
 # Data-mixture materialization (round 6)
 # ---------------------------------------------------------------------------
