@@ -13,7 +13,9 @@ Scale design (100 TB):
 - MinHash signatures are computed with K min-aggregates in a *single*
   groupBy (no K-fold row blowup); band signatures hash R adjacent
   components, so the candidate join shuffles only (band, sig) keys.
-  Pair verification touches candidate docs only.
+  Pair verification touches candidate docs only. Every MinHash path
+  (here, the stream wave, decontamination) is one pass of
+  ``_shingle_sets`` -> ``lsh_bands`` -> ``jaccard_pairs``.
 - SimHash needs one groupBy producing 60 sums; near-pair search is a
   banded (band, val) equi-join that is pigeonhole-COMPLETE for the
   hamming threshold -- never an O(n^2) comparison.
@@ -54,24 +56,35 @@ def _distinct_tokens(col: str = "text") -> Column:
     return F.array_distinct(tokenize_ws(col))
 
 
+def _shingle_sets(documents: DataFrame) -> DataFrame:
+    """(doc_id, toks): each doc's distinct 3-gram shingle set -- the one
+    shingle pass of the MinHash paths, feeding both ``lsh_bands`` and
+    the Jaccard verify of ``jaccard_pairs``.
+
+    Shingling is the Arrow-vectorized UDF
+    (functions/text.py:distinct_word_shingles_arrow): the equivalent JVM
+    expression form runs interpreted (HOF lambdas have no codegen) and
+    was the dominant cost of every dedup plan (6s of the 7s
+    ngram_jaccard_pairs wall at sf0.1). The set is left unsorted: the
+    minhash is a min over its elements and the verify reads only set
+    sizes, and an ``array_sort`` here would put an interpreted HOF into
+    the signature branch. Batch callers ``repartition`` the documents
+    first, so the single-file parquet scan's 1-partition layout doesn't
+    serialize shingling onto one core; the stream wave keeps its scan
+    layout, which sets its index file count."""
+    return documents.select(
+        "doc_id", distinct_word_shingles_arrow()(F.col("text")).alias("toks")
+    )
 
 
-def _shingle_rows(documents: DataFrame, n: int = 3, n_parts: int | None = None) -> DataFrame:
-    """(doc_id, n_sh, s): one row per distinct shingle per doc.
+def _shingle_rows(documents: DataFrame, n: int) -> DataFrame:
+    """(doc_id, n_sh, s): one row per distinct n-gram shingle per doc,
+    with the doc's set size riding along (``ngram_jaccard_pairs``).
 
-    Layout chosen for the plan, not convenience:
-    * the ``repartition`` comes FIRST so the single-file parquet scan's
-      1-partition layout doesn't serialize shingling onto one core;
-    * shingling itself is the Arrow-vectorized UDF
-      (functions/text.py:distinct_word_shingles_arrow) -- the equivalent
-      JVM expression form runs interpreted (HOF lambdas have no codegen)
-      and was the dominant cost of every dedup plan (6s of the 7s
-      ngram_jaccard_pairs wall at sf0.1);
-    * no ``size(sh) > 0`` filter: explode already emits nothing for empty
-      arrays, and a filter would be pushed below the projection, computing
-      the whole shingle array a second time just to test its size.
-    """
-    sh = documents.repartition(n_parts or shuffle_partitions(documents)).select(
+    No ``size(sh) > 0`` filter: explode already emits nothing for empty
+    arrays, and a filter would be pushed below the projection, computing
+    the whole shingle array a second time just to test its size."""
+    sh = documents.repartition(shuffle_partitions(documents)).select(
         "doc_id",
         distinct_word_shingles_arrow(n)(F.col("text")).alias("sh"),
     )
@@ -114,10 +127,11 @@ def canonical_duplicates(documents: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """K minhash components per doc in ONE aggregation: explode distinct
-    3-gram shingles, then K min-aggregates -- no K-fold row blowup, one
-    shuffle. Columns mh0..mh{k-1}.
+def minhash_signatures(toks: DataFrame, k: int = MINHASH_K) -> DataFrame:
+    """K minhash components per doc of the shingle sets ``toks``
+    (``_shingle_sets``) in ONE aggregation: explode the sets, then K
+    min-aggregates -- no K-fold row blowup, one shuffle. Columns
+    mh0..mh{k-1}.
 
     Hash family: md5(seed:shingle) yields 128 bits; components 2i and 2i+1
     take hex chars [1,15] and [17,31] (60 bits each, sign-safe for BIGINT),
@@ -125,15 +139,7 @@ def minhash_signatures(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
     projection BEFORE the aggregation so each is computed once per row, not
     once per min() that references it."""
     assert k % 2 == 0
-    sh = _shingle_rows(documents).select("doc_id", F.col("s").alias("tok"))
-    return _minhash_from_shingle_rows(sh, k)
-
-
-def _minhash_from_shingle_rows(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
-    """Minhash components from an already-shingled (doc_id, tok) relation
-    -- lets persisted shingle tables (ingest_batch) feed the signature
-    computation without re-running the shingle UDF over the text."""
-    digests = sh.select(
+    digests = toks.select("doc_id", F.explode("toks").alias("tok")).select(
         "doc_id",
         *[
             F.md5(F.concat(F.lit(f"{i}:"), F.col("tok"))).alias(f"h{i}")
@@ -150,8 +156,10 @@ def _minhash_from_shingle_rows(sh: DataFrame, k: int = MINHASH_K) -> DataFrame:
     return digests.groupBy("doc_id").agg(*aggs)
 
 
-def _band_signatures(sigs: DataFrame) -> DataFrame:
-    """(doc_id, band, sig): md5 over R adjacent minhash components."""
+def lsh_bands(toks: DataFrame) -> DataFrame:
+    """(doc_id, band, sig) of the shingle sets ``toks``: sig is the md5
+    of R adjacent minhash components. A doc with no shingle has no band,
+    so it is never a candidate."""
     bands = []
     for b in range(LSH_BANDS):
         cols = [F.col(f"mh{b * LSH_ROWS + r}") for r in range(LSH_ROWS)]
@@ -161,50 +169,53 @@ def _band_signatures(sigs: DataFrame) -> DataFrame:
                 F.md5(F.concat_ws(",", *cols)).alias("sig"),
             )
         )
-    return sigs.select(
+    return minhash_signatures(toks).select(
         "doc_id", F.explode(F.array(*bands)).alias("bs")
     ).select("doc_id", "bs.band", "bs.sig")
 
 
-def minhash_lsh_pairs(
-    documents: DataFrame, threshold: float = 0.7
+def jaccard_pairs(
+    a_bands: DataFrame,
+    a_toks: DataFrame,
+    b_bands: DataFrame,
+    b_toks: DataFrame,
+    threshold: float,
+    *,
+    self_join: bool = False,
 ) -> DataFrame:
-    """Near-dup pairs: banded-LSH candidates verified with exact Jaccard on
-    distinct-shingle sets. Returns (doc_a, doc_b, jaccard >= threshold).
+    """(doc_a, doc_b, jaccard >= threshold): the one near-duplicate join.
+    Candidates are the (band, sig) equi-join of side a's bands with side
+    b's, each pair once; only they are verified with the exact Jaccard of
+    their shingle sets. ``self_join`` (a and b the same relation) keeps
+    the pairs with doc_a < doc_b; otherwise a is the probe and b the index
+    it is checked against, and every pair keeps that orientation.
 
     Scale shape: the band join shuffles only (band, sig) keys; candidate
     buckets are clone clusters (shingle sims are bimodal), so the verify
     join touches a near-linear number of pairs, not O(n^2)."""
-    bands = _band_signatures(minhash_signatures(documents))
-    left = bands.select(
-        F.col("doc_id").alias("doc_a"), "band", "sig"
-    )
-    right = bands.select(
-        F.col("doc_id").alias("doc_b"), F.col("band").alias("band_b"), F.col("sig").alias("sig_b")
-    )
+    on = (F.col("band") == F.col("band_b")) & (F.col("sig") == F.col("sig_b"))
+    if self_join:
+        on &= F.col("doc_a") < F.col("doc_b")
     candidates = (
-        left.join(
-            right,
-            (F.col("band") == F.col("band_b"))
-            & (F.col("sig") == F.col("sig_b"))
-            & (F.col("doc_a") < F.col("doc_b")),
+        a_bands.select(F.col("doc_id").alias("doc_a"), "band", "sig")
+        .join(
+            b_bands.select(
+                F.col("doc_id").alias("doc_b"),
+                F.col("band").alias("band_b"),
+                F.col("sig").alias("sig_b"),
+            ),
+            on,
         )
         .select("doc_a", "doc_b")
         .distinct()
     )
-    tsets = documents.repartition(shuffle_partitions(documents)).select(
-        "doc_id",
-        F.array_sort(distinct_word_shingles_arrow()(F.col("text"))).alias(
-            "toks"
-        ),
-    )
     return (
         candidates.join(
-            tsets.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a")),
+            a_toks.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("toks_a")),
             "doc_a",
         )
         .join(
-            tsets.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b")),
+            b_toks.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("toks_b")),
             "doc_b",
         )
         .select(
@@ -217,6 +228,16 @@ def minhash_lsh_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
+
+
+def minhash_lsh_pairs(
+    documents: DataFrame, threshold: float = 0.7
+) -> DataFrame:
+    """Near-dup pairs: banded-LSH candidates verified with exact Jaccard on
+    distinct-shingle sets. Returns (doc_a, doc_b, jaccard >= threshold)."""
+    toks = _shingle_sets(documents.repartition(shuffle_partitions(documents)))
+    bands = lsh_bands(toks)
+    return jaccard_pairs(bands, toks, bands, toks, threshold, self_join=True)
 
 
 #: Deterministic ingest-batch membership for the incremental-dedup demo:
@@ -245,54 +266,14 @@ def dedup_incremental(
     ``minhash_lsh_pairs`` on the batch alone).
     """
     is_batch = F.col("doc_id") % INGEST_MOD == INGEST_REM
-    bands = _band_signatures(minhash_signatures(documents))
-    batch_b = bands.filter(is_batch).select(
-        F.col("doc_id").alias("batch_doc"), "band", "sig"
-    )
-    corpus_b = bands.filter(~is_batch).select(
-        F.col("doc_id").alias("corpus_doc"),
-        F.col("band").alias("band_c"),
-        F.col("sig").alias("sig_c"),
-    )
-    candidates = (
-        batch_b.join(
-            corpus_b,
-            (F.col("band") == F.col("band_c"))
-            & (F.col("sig") == F.col("sig_c")),
-        )
-        .select("batch_doc", "corpus_doc")
-        .distinct()
-    )
-    tsets = documents.repartition(shuffle_partitions(documents)).select(
-        "doc_id",
-        F.array_sort(distinct_word_shingles_arrow()(F.col("text"))).alias(
-            "toks"
-        ),
-    )
-    return (
-        candidates.join(
-            tsets.select(
-                F.col("doc_id").alias("batch_doc"),
-                F.col("toks").alias("toks_a"),
-            ),
-            "batch_doc",
-        )
-        .join(
-            tsets.select(
-                F.col("doc_id").alias("corpus_doc"),
-                F.col("toks").alias("toks_b"),
-            ),
-            "corpus_doc",
-        )
-        .select(
-            "batch_doc",
-            "corpus_doc",
-            (
-                F.size(F.array_intersect("toks_a", "toks_b"))
-                / F.size(F.array_union("toks_a", "toks_b"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    toks = _shingle_sets(documents.repartition(shuffle_partitions(documents)))
+    bands = lsh_bands(toks)
+    return jaccard_pairs(
+        bands.filter(is_batch), toks, bands.filter(~is_batch), toks, threshold
+    ).select(
+        F.col("doc_a").alias("batch_doc"),
+        F.col("doc_b").alias("corpus_doc"),
+        "jaccard",
     )
 
 
@@ -351,68 +332,28 @@ def ingest_batch(
     # small batch, 100 TB batches get batch_bytes/advisory files.
     n_compute = min(shuffle_partitions(batch_docs), 32)
     (
-        batch_docs.repartition(n_compute)
-        .select(
-            "doc_id",
-            F.array_sort(
-                distinct_word_shingles_arrow()(F.col("text"))
-            ).alias("toks"),
-            F.lit(r).alias("r"),
-        )
+        _shingle_sets(batch_docs.repartition(n_compute))
+        .withColumn("r", F.lit(r))
         .hint("rebalance")
         .write.mode("append")
         .parquet(tokens_dir)
     )
     tokens = spark.read.parquet(tokens_dir)
-    batch_sh = (
-        tokens.filter(F.col("r") == r)
-        .select("doc_id", F.explode("toks").alias("tok"))
-    )
-    _band_signatures(_minhash_from_shingle_rows(batch_sh)).withColumn(
+    lsh_bands(tokens.filter(F.col("r") == r)).withColumn(
         "r", F.lit(r)
     ).write.mode("append").parquet(index_dir)
     index = spark.read.parquet(index_dir)
-    candidates = (
-        index.filter(F.col("r") == r)
-        .select(F.col("doc_id").alias("batch_doc"), "band", "sig")
-        .join(
-            index.filter(F.col("r") < r).select(
-                F.col("doc_id").alias("corpus_doc"),
-                F.col("band").alias("band_c"),
-                F.col("sig").alias("sig_c"),
-            ),
-            (F.col("band") == F.col("band_c"))
-            & (F.col("sig") == F.col("sig_c")),
-        )
-        .select("batch_doc", "corpus_doc")
-        .distinct()
-    )
-    pairs = (
-        candidates.join(
-            tokens.select(
-                F.col("doc_id").alias("batch_doc"),
-                F.col("toks").alias("toks_a"),
-            ),
-            "batch_doc",
-        )
-        .join(
-            tokens.select(
-                F.col("doc_id").alias("corpus_doc"),
-                F.col("toks").alias("toks_b"),
-            ),
-            "corpus_doc",
-        )
-        .select(
-            "batch_doc",
-            "corpus_doc",
-            (
-                F.size(F.array_intersect("toks_a", "toks_b"))
-                / F.size(F.array_union("toks_a", "toks_b"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    pairs.write.mode("append").parquet(pairs_dir)
+    jaccard_pairs(
+        index.filter(F.col("r") == r),
+        tokens,
+        index.filter(F.col("r") < r),
+        tokens,
+        threshold,
+    ).select(
+        F.col("doc_a").alias("batch_doc"),
+        F.col("doc_b").alias("corpus_doc"),
+        "jaccard",
+    ).write.mode("append").parquet(pairs_dir)
 
 
 def dedup_ingest_replay(
@@ -642,8 +583,10 @@ def simhash_signatures(documents: DataFrame, bits: int = SIMHASH_BITS) -> DataFr
     31-token vocabulary makes token-level signatures nearly uniform
     (measured avg pair hamming 11.5/60 -- 4% of ALL pairs within 3), while
     shingle signatures are bimodal (avg 29.9/60, near-dups <= ~6)."""
-    sh = _shingle_rows(documents).select(
-        "doc_id", md5_long(F.col("s"), seed=0, bits=60).alias("h")
+    sh = (
+        _shingle_sets(documents.repartition(shuffle_partitions(documents)))
+        .select("doc_id", F.explode("toks").alias("s"))
+        .select("doc_id", md5_long(F.col("s"), seed=0, bits=60).alias("h"))
     )
     sums = sh.groupBy("doc_id").agg(
         *[

@@ -670,59 +670,27 @@ def eval_neardup_contamination(
 
     Eval side: pass ``eval_docs`` (``doc_id``/``text``, ids DISJOINT
     from the training corpus -- a real benchmark loaded from its own
-    parquet) and the sweep unions it with ``documents`` before the
-    banded pair stage, classifying pairs by broadcast eval-id lookup;
-    with ``eval_docs=None`` the registered/oracled stand-in uses the
-    same ``doc_id % eval_mod`` carve-out as the n-gram sweep.
+    parquet); with ``eval_docs=None`` the registered/oracled stand-in
+    uses the same ``doc_id % eval_mod`` carve-out as the n-gram sweep.
 
-    Scale shape: reuses ``minhash_lsh_pairs`` unchanged -- banded
-    (band, sig) equi-join for candidates, exact Jaccard verify on
-    candidates only, never all-pairs; the eval-vs-train orientation is
-    a narrow post-filter on the already-verified pair relation (the
-    external form broadcasts the |eval|-row id set), and the final
-    report is one groupBy over |eval| keys."""
-    from .dedup import minhash_lsh_pairs
+    Scale shape: the eval docs probe the training docs through
+    ``dedup.jaccard_pairs`` -- banded (band, sig) equi-join for
+    candidates, exact Jaccard verify on candidates only, never
+    all-pairs, and every verified pair comes out (eval, train)
+    oriented -- and the final report is one groupBy over |eval| keys."""
+    from .dedup import _shingle_sets, jaccard_pairs, lsh_bands
 
-    if eval_docs is not None:
-        cols = ["doc_id", "text"]
-        corpus = documents.select(*cols).unionByName(eval_docs.select(*cols))
-        eval_ids = eval_docs.select(F.col("doc_id").alias("eval_id"))
-        pairs = minhash_lsh_pairs(corpus, threshold)
-        flagged = pairs.join(
-            F.broadcast(eval_ids.withColumnRenamed("eval_id", "doc_a")).withColumn(
-                "a_eval", F.lit(True)
-            ),
-            "doc_a",
-            "left",
-        ).join(
-            F.broadcast(eval_ids.withColumnRenamed("eval_id", "doc_b")).withColumn(
-                "b_eval", F.lit(True)
-            ),
-            "doc_b",
-            "left",
-        )
-        a_eval = F.coalesce(F.col("a_eval"), F.lit(False))
-        b_eval = F.coalesce(F.col("b_eval"), F.lit(False))
-        spanning = flagged.filter(a_eval != b_eval).select(
-            F.when(a_eval, F.col("doc_a")).otherwise(F.col("doc_b")).alias(
-                "eval_id"
-            ),
-            "jaccard",
-        )
-        eval_side = eval_ids
-    else:
-        pairs = minhash_lsh_pairs(documents, threshold)
-        a_eval = F.col("doc_a") % eval_mod == 0
-        b_eval = F.col("doc_b") % eval_mod == 0
-        spanning = pairs.filter(a_eval != b_eval).select(
-            F.when(a_eval, F.col("doc_a")).otherwise(F.col("doc_b")).alias(
-                "eval_id"
-            ),
-            "jaccard",
-        )
-        eval_side = documents.filter(F.col("doc_id") % eval_mod == 0).select(
-            F.col("doc_id").alias("eval_id")
-        )
+    if eval_docs is None:
+        is_eval = F.col("doc_id") % eval_mod == 0
+        eval_docs, documents = documents.filter(is_eval), documents.filter(~is_eval)
+    eval_toks, train_toks = (
+        _shingle_sets(df.repartition(shuffle_partitions(df)))
+        for df in (eval_docs, documents)
+    )
+    spanning = jaccard_pairs(
+        lsh_bands(eval_toks), eval_toks, lsh_bands(train_toks), train_toks, threshold
+    ).select(F.col("doc_a").alias("eval_id"), "jaccard")
+    eval_side = eval_docs.select(F.col("doc_id").alias("eval_id"))
     per_eval = spanning.groupBy("eval_id").agg(
         F.count("*").alias("n_train_twins"),
         F.max("jaccard").alias("max_jaccard"),

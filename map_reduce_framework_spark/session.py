@@ -31,7 +31,11 @@ from collections.abc import Callable, Iterable
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the CPUs this process may run on: the
+    local master's cores and the shuffle partitions of ``get_spark``."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -61,7 +65,7 @@ def get_spark(
     engine's UDF modules, the daemon module is imported from the
     worker's working directory or ``PYTHONPATH``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     driver_memory = os.environ.get(
         "SPARK_DRIVER_MEMORY", f"{min(8192, ram_mb // 2)}m"
@@ -72,10 +76,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config(

@@ -149,6 +149,68 @@ def test_arrow_shingles_match_jvm_expr(spark, sf_oracle):
     assert jvm == arrow
 
 
+_EDGE_DOCS = [
+    (1, ""),
+    (2, "solo"),
+    (3, "two words"),
+    (4, "a b c a b c a b c a b"),  # repeated shingles
+    (5, "  x\ty\n\nz   w \t x\ny  z\tw "),  # tab/newline/space runs
+    (6, "x y z w x y z w"),  # doc 5's tokens, single-spaced
+]
+
+
+def _near_dup_docs(spark, rows):
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_lsh_bands_match_duckdb_on_edge_docs(spark):
+    """lsh_bands over _shingle_sets equals the oracle's _MINHASH_CTE bands
+    on docs with no shingle (empty, 1 and 2 tokens: no bands at all),
+    repeated shingles, and whitespace runs."""
+    import duckdb
+
+    docs = _near_dup_docs(spark, _EDGE_DOCS)
+    got = {tuple(r) for r in dedup.lsh_bands(dedup._shingle_sets(docs)).collect()}
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", _EDGE_DOCS)
+    want = set(
+        con.sql(
+            f"WITH {dedup._MINHASH_CTE} SELECT doc_id, band, sig FROM bands"
+        ).fetchall()
+    )
+    assert got == want
+    assert {d for d, _, _ in got} == {4, 5, 6}
+    assert len(got) == 3 * dedup.LSH_BANDS
+
+
+def test_jaccard_pairs_self_join_and_probe_orientation(spark):
+    """A self-join returns each pair once with doc_a < doc_b, although
+    identical docs share every band; a probe keeps its (probe, index)
+    orientation when the probe's id is the larger one."""
+    text = "the quick brown fox jumps over the lazy dog again"
+    docs = _near_dup_docs(
+        spark, [(9, text), (3, text), (5, text), (7, "unrelated words only here")]
+    )
+    toks = dedup._shingle_sets(docs)
+    bands = dedup.lsh_bands(toks)
+    pairs = [
+        tuple(r)
+        for r in dedup.jaccard_pairs(
+            bands, toks, bands, toks, 0.7, self_join=True
+        ).collect()
+    ]
+    assert sorted(pairs) == [(3, 5, 1.0), (3, 9, 1.0), (5, 9, 1.0)]
+    is_probe = F.col("doc_id") == 9
+    probe = dedup.jaccard_pairs(
+        bands.filter(is_probe), toks, bands.filter(~is_probe), toks, 0.7
+    )
+    assert sorted(tuple(r) for r in probe.collect()) == [
+        (9, 3, 1.0),
+        (9, 5, 1.0),
+    ]
+
+
 def test_vectorized_lsh_buckets_match_jvm_expr(spark, sf_oracle):
     """The Arrow-vectorized bucket hash must equal the pure-JVM expression
     form (which is what the DuckDB oracle mirrors) on every (vec, table)."""

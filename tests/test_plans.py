@@ -187,11 +187,10 @@ def test_interval_overlap_join_is_binned_equi(spark):
 
 
 def test_neardup_contamination_is_band_blocked(spark):
-    """eval_neardup_contamination inherits minhash_lsh_pairs' blocking
-    guarantee: every pairwise stage is an equi-join on (band, sig) --
-    never a cartesian/nested-loop eval x train sweep. At 100 TB the
-    eval-vs-train orientation must stay a narrow post-filter on the
-    already-banded pair relation, which this gate pins."""
+    """eval_neardup_contamination probes the eval docs against the
+    training docs through the (band, sig) equi-join that every MinHash
+    path shares -- never a cartesian/nested-loop eval x train sweep,
+    which at 100 TB would pair every eval doc with the whole corpus."""
     plan = _formatted_plan(spark, "eval_neardup_contamination")
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -468,26 +467,24 @@ def test_ingest_probe_is_equi_join(spark, tmp_path):
     the join keys fell out and the probe is O(batch x corpus)."""
     from pyspark.sql import functions as F
 
-    from map_reduce_framework_spark.operators.dedup import ingest_batch
+    from map_reduce_framework_spark.operators.dedup import (
+        ingest_batch,
+        jaccard_pairs,
+    )
     from map_reduce_framework_spark.sources.io import load_table
 
     docs = load_table(spark, SF, "documents")
     state = str(tmp_path / "state")
     ingest_batch(spark, state, docs.filter(F.col("doc_id") % 4 == 0), 0)
-    # rebuild round 1's probe plan the way ingest_batch does
+    # round 1's probe: the join ingest_batch runs, on its state tables
     index = spark.read.parquet(state + "/band_index")
-    probe = (
-        index.filter(F.col("r") == 1)
-        .select(F.col("doc_id").alias("batch_doc"), "band", "sig")
-        .join(
-            index.filter(F.col("r") < 1).select(
-                F.col("doc_id").alias("corpus_doc"),
-                F.col("band").alias("band_c"),
-                F.col("sig").alias("sig_c"),
-            ),
-            (F.col("band") == F.col("band_c"))
-            & (F.col("sig") == F.col("sig_c")),
-        )
+    tokens = spark.read.parquet(state + "/tokens")
+    probe = jaccard_pairs(
+        index.filter(F.col("r") == 1),
+        tokens,
+        index.filter(F.col("r") < 1),
+        tokens,
+        0.7,
     )
     plan = probe._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

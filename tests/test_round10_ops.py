@@ -513,6 +513,66 @@ class TestCrossEpochDedup:
         }
         assert idx == {12}
 
+    def test_index_file_counts(self, spark, tmp_path):
+        """A wave shingles at its scan layout, which sets how many files
+        its index commits. A round-robin spread before the shingle pass
+        would fan epoch 0's six survivors out into six ``index/toks``
+        files. The counts were recorded before the wave's bands and its
+        verify shared one shingle pass."""
+        import glob
+
+        from map_reduce_framework_spark.streaming.ops import (
+            stream_ingest_epoch,
+        )
+
+        words = _BASE_TEXT.split()
+
+        def doc(doc_id, suffix, swap=None):
+            ws = [w + suffix for w in words]
+            if swap is not None:
+                ws[swap] = "swapped"
+            return doc_id, " ".join(ws)
+
+        waves = [
+            # doc 7 near-duplicates doc 1 within the wave
+            [doc(i, chr(96 + i)) for i in range(1, 7)] + [doc(7, "a", 5)],
+            # doc 11 near-duplicates epoch 0's doc 2
+            [doc(11, "b", 9)] + [doc(i, chr(96 + i)) for i in range(12, 16)],
+        ]
+        source = str(tmp_path / "source")
+        work = str(tmp_path / "work")
+        kept, counts = [], []
+        # the bands files are the non-empty hash partitions of the cached
+        # signature aggregate, so their count follows the session's
+        # shuffle partitions, which an earlier test module may have changed
+        key = "spark.sql.shuffle.partitions"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "8")
+        try:
+            for rows in waves:
+                _synthetic_docs(spark, rows).coalesce(1).write.mode(
+                    "append"
+                ).parquet(source)
+                d = stream_ingest_epoch(spark, source, work)
+                kept.append(
+                    sorted(
+                        r["doc_id"]
+                        for r in spark.read.parquet(
+                            os.path.join(d, "input")
+                        ).collect()
+                    )
+                )
+                counts.append(
+                    tuple(
+                        len(glob.glob(os.path.join(d, "index", sub, "*.parquet")))
+                        for sub in ("toks", "bands")
+                    )
+                )
+        finally:
+            spark.conf.set(key, old)
+        assert kept == [[1, 2, 3, 4, 5, 6], [12, 13, 14, 15]]
+        assert counts == [(1, 4), (1, 4)]
+
     def test_torn_epoch_reentry_still_converges(self, spark, tmp_path):
         import shutil
 

@@ -455,20 +455,20 @@ def test_dedup_incremental_persisted_index_roundtrip(spark, sf_smoke, tmp_path):
     from map_reduce_framework_spark.operators.dedup import (
         INGEST_MOD,
         INGEST_REM,
-        _band_signatures,
+        _shingle_sets,
         dedup_incremental,
-        minhash_signatures,
+        lsh_bands,
     )
 
     docs = load_table(spark, sf_smoke, "documents")
     is_batch = F.col("doc_id") % INGEST_MOD == INGEST_REM
     idx_dir = str(tmp_path / "lsh_index")
-    _band_signatures(minhash_signatures(docs.filter(~is_batch))).write.mode(
+    lsh_bands(_shingle_sets(docs.filter(~is_batch))).write.mode(
         "overwrite"
     ).parquet(idx_dir)
 
     corpus_index = spark.read.parquet(idx_dir)
-    batch_bands = _band_signatures(minhash_signatures(docs.filter(is_batch)))
+    batch_bands = lsh_bands(_shingle_sets(docs.filter(is_batch)))
     candidates = (
         batch_bands.select(F.col("doc_id").alias("batch_doc"), "band", "sig")
         .join(

@@ -436,13 +436,14 @@ def test_minhash_matches_independent_python(spark, sf_smoke):
 
     from map_reduce_framework_spark.operators.dedup import (
         MINHASH_K,
+        _shingle_sets,
         minhash_signatures,
     )
 
     docs = load_table(spark, sf_smoke, "documents")
     got = {
         r.doc_id: tuple(r[f"mh{i}"] for i in range(MINHASH_K))
-        for r in minhash_signatures(docs).collect()
+        for r in minhash_signatures(_shingle_sets(docs)).collect()
     }
 
     want = {}

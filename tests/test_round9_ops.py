@@ -722,15 +722,19 @@ class TestEpochIngest:
         # round 10: each wave dedups WITHIN itself (greedy keeper-is-
         # min), and wave 1 is additionally checked against wave 0's
         # committed band index -- each epoch packs the SURVIVORS
+        from map_reduce_framework_spark.operators.dedup import (
+            _shingle_sets,
+            lsh_bands,
+        )
         from map_reduce_framework_spark.streaming.ops import (
             _epoch_near_dup_drops,
             _intra_wave_drops,
-            _wave_signatures,
         )
 
         def wave_survivors(parity, prev):
             wave = kept.filter(f"doc_id % 2 = {parity}")
-            b, t = _wave_signatures(wave)
+            t = _shingle_sets(wave)
+            b = lsh_bands(t)
             surv = wave.join(_intra_wave_drops(b, t), "doc_id", "left_anti")
             cross = _epoch_near_dup_drops(spark, work, prev, b, t)
             if cross is not None:

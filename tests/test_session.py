@@ -11,6 +11,7 @@ import pyspark
 
 from map_reduce_framework_spark._worker_daemon import worker_path
 from map_reduce_framework_spark.session import (
+    default_cpus,
     materialize_parallel,
     normalize_runtime_conf,
     shuffle_partitions,
@@ -30,6 +31,15 @@ def test_shuffle_partitions_reads_session_value(spark):
         assert shuffle_partitions(spark) == 200
     finally:
         spark.conf.set(KEY, old)
+
+
+def test_default_cpus_follows_the_machine(monkeypatch):
+    """Unset, the core count (and so get_spark's master and shuffle
+    partitions) is the CPUs this process may run on, not a fixed 32."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
 
 
 def test_materialize_parallel_keeps_input_order(spark):

@@ -139,7 +139,7 @@ def test_minhash_lsh_survives_adversarial_band_skew(spark):
 
     # (a) the planted corpus is adversarial: one (band, sig) bucket
     # holds >50% of its band's signatures
-    bands = dedup._band_signatures(dedup.minhash_signatures(skewed))
+    bands = dedup.lsh_bands(dedup._shingle_sets(skewed))
     hot = (
         bands.groupBy("band", "sig")
         .count()
