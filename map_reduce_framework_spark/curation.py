@@ -415,25 +415,20 @@ def curation_run_ledger(
     return spark.read.parquet(_stage_dir(scratch_dir, "ledger"))
 
 
-#: Per-process scratch dirs for the registered query, keyed by
-#: (sf_dir, parquet fingerprint): repeated driver/bench/sweep calls
-#: inside one process resume the same committed run (pure reads), a
-#: table regenerated under the same path forces a fresh run (the
-#: _TRACE_CACHE staleness class, ADVICE r9 #3); separate processes
-#: never share a dir, so two concurrent sweeps cannot race each
-#: other's staging renames.
-_SCRATCH: dict[tuple, str] = {}
-
-
 def scratch_for(sf_dir: str) -> str:
+    """The registered query's scratch dir, one per documents table in
+    this process (sources.io.table_memo): repeated driver/bench/sweep
+    calls resume the same committed run (pure reads), a regenerated
+    table gets a fresh run."""
     import tempfile
 
-    from .operators.langid import _table_fingerprint
+    from .sources.io import table_memo
 
-    key = (sf_dir, _table_fingerprint(sf_dir))
-    if key not in _SCRATCH:
-        _SCRATCH[key] = tempfile.mkdtemp(prefix="mrfs-curation-run-")
-    return _SCRATCH[key]
+    return table_memo(
+        sf_dir,
+        "curation_run_ledger",
+        lambda: tempfile.mkdtemp(prefix="mrfs-curation-run-"),
+    )
 
 
 def _ledger_sql() -> str:

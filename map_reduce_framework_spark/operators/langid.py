@@ -8,13 +8,14 @@ logistic classifier over hashed character-3-gram features, fully
 in-engine, and scores every document with a predicted language and a
 confidence -- the fastText-style langid recipe (Joulin et al. 2017,
 "Bag of Tricks for Efficient Text Classification": hashed n-gram
-features + linear classifier) restated in the integer-exact training
-scheme this repo already proved on ``quality_classifier_train``
-(text_analysis.py): all features, labels, probabilities, gradients and
-weights live in 1e-6 fixed point, every cross-engine sum is over
-BIGINTs, and the one transcendental per step (sigmoid's exp) is
-quantized immediately, so the DuckDB oracle re-derives the whole
-training trajectory bit-exactly as an unrolled CTE chain.
+features + linear classifier) trained by the engine's one integer-exact
+logistic loop, ``text_analysis._train_logistic``, which
+``quality_classifier_train`` also runs: all features, labels,
+probabilities, gradients and weights live in 1e-6 fixed point, every
+cross-engine sum is over integers, and the one transcendental per step
+(sigmoid's exp) is quantized immediately, so the DuckDB oracle
+re-derives the whole training trajectory bit-exactly as an unrolled CTE
+chain.
 
 Features (the ``doc_hash_embeddings`` hashing trick, clustering.py,
 applied to char n-grams): bucket(g) = md5('lid:' || g) % LID_DIM over
@@ -39,12 +40,15 @@ separates languages and detects planted mislabels.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .text_analysis import DSIR_SCALE, LANG_PROFILES
+from .text_analysis import (
+    DSIR_SCALE,
+    LANG_PROFILES,
+    _sigmoid_q,
+    _train_logistic,
+)
 
 LID_DIM = 16  # hashed char-3-gram buckets
 LID_ITERS = 6
@@ -120,20 +124,6 @@ def _lid_features(
     )
 
 
-def _pq_col(w_l: list):
-    """Quantized sigmoid probability for ONE class under integer
-    weights: z = (sum_j w_j * xq_j) / 1e12, pq = floor(1e6 / (1 +
-    exp(-z)) + 0.5) -- identical rule to _qct_pq."""
-    dot = None
-    for j, wq in enumerate(w_l):
-        term = F.lit(int(wq)) * F.col(f"xq{j}")
-        dot = term if dot is None else dot + term
-    z = dot.cast("double") / F.lit(1e12)
-    return F.floor(
-        F.lit(float(_S)) / (F.lit(1.0) + F.exp(-z)) + F.lit(0.5)
-    ).cast("bigint")
-
-
 def langid_train_trace(
     documents: DataFrame,
     iters: int = LID_ITERS,
@@ -142,148 +132,31 @@ def langid_train_trace(
     dim: int = LID_DIM,
     ngram: int = 3,
 ) -> tuple[list, dict]:
-    """Run the one-vs-rest training loop; returns (trace_rows, final
-    weights {lang: [w_0..w_DIM]}). ALL classes train in the SAME
+    """Train the one-vs-rest model through the shared quantized
+    logistic loop (text_analysis._train_logistic); returns (trace_rows,
+    final weights {lang: [w_0..w_DIM]}). ALL classes train in the SAME
     aggregate: each iteration is one map-side-combined pass producing
     |langs| x (DIM + 2) + 1 scalars -- 5 binary classifiers for the
     price of one scan."""
-    spark = documents.sparkSession
     feats = _lid_features(documents, dim=dim, ngram=ngram)
-    # materialize the cache NOW, while whole-stage codegen is still on:
-    # the md5-per-gram feature scan is the one piece that benefits from
-    # compiled code (the interpreted-mode flip below is for the tiny
-    # per-iteration aggregates only)
-    feats.persist().count()
-    # Two measured iteration-loop costs, both fixed here (23 s -> ~6 s
-    # for 6 iterations at sf0.1): (1) whole-stage codegen pays a fresh
-    # multi-second COMPILE per job because the literal weights bake
-    # into the generated source -- interpreted mode executes the same
-    # ~90-scalar aggregate over the cached tiny relation in ~0.3 s;
-    # (2) building ~90 expression trees through the Column DSL costs
-    # ~1.8 s/iter of py4j round-trips -- SQL strings parse JVM-side in
-    # one call each.
-    codegen_key = "spark.sql.codegen.wholeStage"
-    codegen_prev = spark.conf.get(codegen_key)
-    try:
-        spark.conf.set(codegen_key, "false")
-        w = {l: [0] * (dim + 1) for l in LID_LANGS}
-        rows: list = []
-        xq_names = [f"xq{j}" for j in range(dim + 1)]
-        for t in range(1, iters + 1):
-            sel = list(xq_names)
-            nll_sel = xq_names + [
-                f"pq_{l}" for l in LID_LANGS
-            ] + [f"y_{l}" for l in LID_LANGS]
-            for l in LID_LANGS:
-                dot = " + ".join(
-                    f"{int(w[l][j])}L * xq{j}"
-                    for j in range(dim + 1)
-                )
-                sel.append(
-                    f"CAST(FLOOR(1.0E6 / (1.0D + EXP(-(CAST(({dot}) AS "
-                    f"DOUBLE) / 1.0E12))) + 0.5D) AS BIGINT) AS pq_{l}"
-                )
-                sel.append(
-                    f"CAST(CASE WHEN lang = '{l}' THEN {_S} ELSE 0 END "
-                    f"AS BIGINT) AS y_{l}"
-                )
-                pc = (
-                    f"(CAST(LEAST(GREATEST(pq_{l}, 1), {_S - 1}) AS "
-                    f"DOUBLE) / 1.0E6)"
-                )
-                nll_sel.append(
-                    f"CAST(FLOOR(-LN(CASE WHEN y_{l} = {_S} THEN {pc} "
-                    f"ELSE 1.0D - {pc} END) * 1.0E6 + 0.5D) AS BIGINT) "
-                    f"AS nll_{l}"
-                )
-            scored = feats.selectExpr(*sel).selectExpr(*nll_sel)
-            # Accumulate in DECIMAL(38,0), not BIGINT: each per-row term
-            # (pq-y)*xq reaches ~1e12, so a LongType SUM silently wraps
-            # past ~9e6 documents with ANSI mode off while the DuckDB
-            # oracle sums HUGEINT (ADVICE r8 #1). DECIMAL(38,0) carries
-            # ~1e26 documents -- far past 100 TB -- and map-side partial
-            # aggregation still applies (Sum supports decimal buffers).
-            aggs = []
-            for l in LID_LANGS:
-                for j in range(dim + 1):
-                    aggs.append(
-                        F.expr(
-                            f"SUM(CAST((pq_{l} - y_{l}) * xq{j} "
-                            f"AS DECIMAL(38,0)))"
-                        ).alias(f"g_{l}_{j}")
-                    )
-                aggs.append(
-                    F.expr(
-                        f"SUM(CAST(nll_{l} AS DECIMAL(38,0)))"
-                    ).alias(f"nll_{l}")
-                )
-            aggs.append(F.count("*").alias("n"))
-            agg = scored.agg(*aggs).collect()[0]
-            n = agg["n"]
-            if n == 0:
-                break
-            for l in LID_LANGS:
-                w[l] = [
-                    wq
-                    - math.floor(
-                        float(agg[f"g_{l}_{j}"]) * lr / (float(n) * 1e6)
-                        + 0.5
-                    )
-                    for j, wq in enumerate(w[l])
-                ]
-                avg_loss = float(agg[f"nll_{l}"]) / (float(n) * 1e6)
-                rows.append(
-                    (t, l, avg_loss, *[float(wq) / 1e6 for wq in w[l]])
-                )
-        return rows, w
-    finally:
-        spark.conf.set(codegen_key, codegen_prev)
-        feats.unpersist()
-
-
-#: SparkSession (weakly referenced) -> {(sf_dir, fingerprint, iters,
-#: lr): (trace_rows, weights)}. The trace is a deterministic pure
-#: function of the table bytes, and the registered langid queries all
-#: need it -- memoizing across them turns 18 training jobs per sweep
-#: into 6. Keyed on the live session OBJECT, not id(): CPython recycles
-#: ids after GC, so a stopped-and-recreated session could alias a dead
-#: session's entry (ADVICE r8 #3); the weak keys also let dead
-#: sessions' caches be collected. The fingerprint (file sizes +
-#: mtimes) invalidates the entry when the parquet under sf_dir is
-#: regenerated within one process.
-import weakref
-
-_TRACE_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _table_fingerprint(sf_dir: str, name: str = "documents") -> tuple:
-    import os
-
-    root = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isfile(root):
-        st = os.stat(root)
-        return ((name, st.st_size, st.st_mtime_ns),)
-    out = []
-    for dirpath, _dirs, files in sorted(os.walk(root)):
-        for fn in sorted(files):
-            st = os.stat(os.path.join(dirpath, fn))
-            rel = os.path.relpath(os.path.join(dirpath, fn), root)
-            out.append((rel, st.st_size, st.st_mtime_ns))
-    return tuple(out)
+    return _train_logistic(feats, LID_LANGS, dim, iters, lr)
 
 
 def _trace_for_table(
     spark, sf_dir: str, iters: int = LID_ITERS, lr: float = LID_LR
 ):
-    from ..sources.io import load_table
+    """The registered langid queries' shared trace: trained once per
+    documents table (sources.io.table_memo), so a sweep pays one
+    training, not one per query."""
+    from ..sources.io import load_table, table_memo
 
-    per_session = _TRACE_CACHE.setdefault(spark, {})
-    key = (sf_dir, _table_fingerprint(sf_dir), iters, lr)
-    if key not in per_session:
-        per_session[key] = langid_train_trace(
+    return table_memo(
+        sf_dir,
+        ("langid", iters, lr),
+        lambda: langid_train_trace(
             load_table(spark, sf_dir, "documents"), iters, lr
-        )
-    return per_session[key]
+        ),
+    )
 
 
 def _w_names() -> list[str]:
@@ -329,8 +202,11 @@ def langid_scores(
         documents, iters, lr, dim=dim, ngram=ngram
     )
     feats = _lid_features(documents, dim=dim, ngram=ngram)
-    pqs = {l: _pq_col(w[l]).alias(f"pq_{l}") for l in LID_LANGS}
-    scored = feats.select("doc_id", "lang", *pqs.values())
+    scored = feats.selectExpr(
+        "doc_id",
+        "lang",
+        *[f"{_sigmoid_q(w[l])[0]} AS pq_{l}" for l in LID_LANGS],
+    )
     best = F.greatest(*[F.col(f"pq_{l}") for l in LID_LANGS])
     pred = None
     for l in LID_LANGS:

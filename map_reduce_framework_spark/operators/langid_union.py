@@ -436,15 +436,6 @@ def langid_scores_wide_union(
     )
 
 
-#: Per-process memo of trained models: (sf_dir, parquet fingerprint,
-#: iters, lr, dim, word_ngrams) under a weakly-referenced session --
-#: bench reps and sweep double-runs train once, regenerated tables
-#: retrain.
-import weakref
-
-_UNION_CACHE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
 def union_trained_for_table(
     spark,
     sf_dir: str,
@@ -453,14 +444,18 @@ def union_trained_for_table(
     dim: int = UNION_DIM,
     word_ngrams: tuple = UNION_WORD_NGRAMS,
 ):
-    from ..sources.io import load_table
-    from .langid import _table_fingerprint
+    """The registered wide queries' model, trained once per documents
+    table and parameter set (sources.io.table_memo)."""
+    from ..sources.io import load_table, table_memo
 
-    per = _UNION_CACHE.setdefault(spark, {})
-    key = (sf_dir, _table_fingerprint(sf_dir), iters, lr, dim, word_ngrams)
-    if key not in per:
-        docs = load_table(spark, sf_dir, "documents")
-        per[key] = union_train_trace(
-            docs, iters, lr, dim=dim, word_ngrams=word_ngrams
-        )
-    return per[key]
+    return table_memo(
+        sf_dir,
+        ("langid_union", iters, lr, dim, word_ngrams),
+        lambda: union_train_trace(
+            load_table(spark, sf_dir, "documents"),
+            iters,
+            lr,
+            dim=dim,
+            word_ngrams=word_ngrams,
+        ),
+    )

@@ -22,7 +22,7 @@ from .operators import (apps, audio, clustering, dedup, fuzzy, graph, html_extra
 from .operators import relational as rel
 from .session import normalize_runtime_conf
 from .sources import shard_writer
-from .sources.io import load_table
+from .sources.io import load_table, table_memo
 from .streaming import ops as streaming_ops
 
 
@@ -269,8 +269,6 @@ _TABLE = [
     # log() ulps differ across engines, so the value contract is
     # pytest-pinned (1e-9 rel) instead of hash-matched.
     ("unigram_logprob_scores", text_analysis, "documents"),
-    ("quality_classifier_train", text_analysis, "documents"),
-    ("quality_classifier_trained_scores", text_analysis, "documents"),
     ("doc_fingerprints", text_analysis, "documents"),
     ("bm25_top_docs", text_analysis, "documents"),
     ("lang_temperature_plan", text_analysis, "documents"),
@@ -517,6 +515,35 @@ def q_langid_mixture_sample(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     return langid.langid_mixture_sample(
         docs, _trace=langid._trace_for_table(spark, sf_dir)
+    )
+
+
+# The quality classifier trains through the same loop as langid, and its
+# two queries share one trace per table the same way.
+def _qct_trace(spark, sf_dir):
+    return table_memo(
+        sf_dir,
+        ("quality_classifier", text_analysis.QCT_ITERS, text_analysis.QCT_LR),
+        lambda: text_analysis.quality_classifier_train_trace(
+            load_table(spark, sf_dir, "documents")
+        ),
+    )
+
+
+@register("quality_classifier_train", text_analysis.ORACLE_SQL["quality_classifier_train"])
+def q_quality_classifier_train(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents")
+    return text_analysis.quality_classifier_train(docs, _trace=_qct_trace(spark, sf_dir))
+
+
+@register(
+    "quality_classifier_trained_scores",
+    text_analysis.ORACLE_SQL["quality_classifier_trained_scores"],
+)
+def q_quality_classifier_trained_scores(spark, sf_dir):
+    docs = load_table(spark, sf_dir, "documents")
+    return text_analysis.quality_classifier_trained_scores(
+        docs, _trace=_qct_trace(spark, sf_dir)
     )
 
 

@@ -26,13 +26,14 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _shingle_sets, jaccard_pairs, lsh_bands
-from ..sources.io import load_table
+from ..sources.io import load_table, table_memo
 
 
 def _as_stream_dir(path: str) -> str:
@@ -627,8 +628,9 @@ def q_video_frame_dhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_langid_scores_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID at ingest -- the deployment shape a real curation
     run uses: the classifier trains OFFLINE on the batch table (the
-    shared per-session trace memo), and the frozen weights score every
-    arriving document as a stateless narrow projection, append mode.
+    per-table trace memo the batch queries share), and the frozen
+    weights score every arriving document as a stateless narrow
+    projection, append mode.
     The registered oracle is the batch unrolled-CTE derivation, so the
     sweep proves stream scoring == batch scoring under the SAME trained
     weights, end to end through the hashed-feature path."""
@@ -724,24 +726,6 @@ def stream_ingest_training_shards(
     return shards
 
 
-#: Keyed on (sf_dir, parquet fingerprint), not sf_dir alone: a table
-#: regenerated under the same path within one process must force a
-#: fresh run, not serve the stale committed shards (ADVICE r9 #3 --
-#: the same staleness class the langid _TRACE_CACHE fixed in r9).
-_INGEST_SCRATCH: dict[tuple, str] = {}
-
-
-def _ingest_scratch(sf_dir: str) -> str:
-    import tempfile
-
-    from ..operators.langid import _table_fingerprint
-
-    key = (sf_dir, _table_fingerprint(sf_dir))
-    if key not in _INGEST_SCRATCH:
-        _INGEST_SCRATCH[key] = tempfile.mkdtemp(prefix="mrfs-stream-shards-")
-    return _INGEST_SCRATCH[key]
-
-
 def _manifest_accounting_df(spark: SparkSession, shards: str) -> DataFrame:
     """Per-shard-file accounting of a committed shard directory, read
     back from its manifest -- the ONE schema both registered ingest
@@ -774,9 +758,12 @@ def q_shard_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch packing derivation over the quality-pass subset, so a sweep
     hash match proves stream ingest == batch curation down to every
     shard file's sequence/doc/token counts."""
-    shards = stream_ingest_training_shards(
-        spark, sf_dir, _ingest_scratch(sf_dir)
+    scratch = table_memo(
+        sf_dir,
+        "shard_ingest_stream",
+        lambda: tempfile.mkdtemp(prefix="mrfs-stream-shards-"),
     )
+    shards = stream_ingest_training_shards(spark, sf_dir, scratch)
     return _manifest_accounting_df(spark, shards)
 
 
@@ -812,10 +799,6 @@ def _shard_ingest_stream_sql() -> str:
 ORACLE_SQL["shard_ingest_stream"] = _shard_ingest_stream_sql()
 
 
-#: (sf_dir, fingerprint) -> scratch for the HTML-ingest twin below.
-_INGEST_HTML_SCRATCH: dict[tuple, str] = {}
-
-
 def q_shard_ingest_stream_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     """shard_ingest_stream's RAW-HTML twin (round 10): the drop
     directory holds crawl pages; the ingest stream extracts main
@@ -825,21 +808,16 @@ def q_shard_ingest_stream_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derives the packing -- a sweep hash match proves
     HTML -> extract -> quality -> pack -> shard-commit end to end in
     ONE registered number."""
-    import tempfile
-
     from ..operators.html_extract import synth_pages
-    from ..operators.langid import _table_fingerprint
-    from ..sources.io import load_table
 
-    key = (sf_dir, _table_fingerprint(sf_dir))
-    if key not in _INGEST_HTML_SCRATCH:
+    def build() -> str:
         scratch = tempfile.mkdtemp(prefix="mrfs-html-shards-")
-        drop = os.path.join(scratch, "drop")
         synth_pages(load_table(spark, sf_dir, "documents")).coalesce(
             1
-        ).write.mode("append").parquet(drop)
-        _INGEST_HTML_SCRATCH[key] = scratch
-    scratch = _INGEST_HTML_SCRATCH[key]
+        ).write.mode("append").parquet(os.path.join(scratch, "drop"))
+        return scratch
+
+    scratch = table_memo(sf_dir, "shard_ingest_stream_html", build)
     shards = stream_ingest_training_shards(
         spark,
         sf_dir,
@@ -1451,10 +1429,6 @@ def iter_epoch_shards(spark, work_dir: str, alpha: float | None = None):
             yield d, entry, df
 
 
-#: Same (sf_dir, fingerprint) keying as _INGEST_SCRATCH (ADVICE r9 #3).
-_EPOCH_SCRATCH: dict[tuple, str] = {}
-
-
 def q_shard_epoch_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The registered surface: a deterministic two-wave arrival of RAW
     HTML PAGES (even doc_ids land first, odd doc_ids later) through
@@ -1465,18 +1439,14 @@ def q_shard_epoch_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     split, the MinHash band candidates + jaccard confirmation, and
     both epochs' packing from the parity rule alone -- a sweep hash
     match proves the growing-HTML-corpus path end to end."""
-    import tempfile
-
     from ..operators.html_extract import synth_pages
-    from ..operators.langid import _table_fingerprint
-    from ..sources.io import load_table
     from ..sources.shard_writer import read_manifest
 
-    cache_key = (sf_dir, _table_fingerprint(sf_dir))
-    if cache_key not in _EPOCH_SCRATCH:
-        # build into a FRESH dir and memoize only on success: a crash
-        # mid-build must not poison later calls with a half-built
-        # source (re-entry would skip ingestion or duplicate waves)
+    def build() -> str:
+        # a FRESH dir per build, memoized only once both waves are in:
+        # a crash mid-build must not poison later calls with a
+        # half-built source (re-entry would skip ingestion or
+        # duplicate waves)
         scratch = tempfile.mkdtemp(prefix="mrfs-epochs-")
         source = os.path.join(scratch, "source")
         work = os.path.join(scratch, "work")
@@ -1489,9 +1459,9 @@ def q_shard_epoch_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(source)
         stream_ingest_epoch(spark, source, work)
-        _EPOCH_SCRATCH[cache_key] = scratch
-    scratch = _EPOCH_SCRATCH[cache_key]
-    work = os.path.join(scratch, "work")
+        return scratch
+
+    work = os.path.join(table_memo(sf_dir, "shard_epoch_ledger", build), "work")
     rows = []
     for name in sorted(os.listdir(work)):
         if not name.startswith("epoch-") or name.endswith(".staging"):

@@ -266,11 +266,9 @@ def test_backup_stays_passive_while_primary_heartbeats(tmp_path):
 
 
 # --- D8 metrics surface (utils/metrics.go analog) --------------------------
-def test_metrics_snapshot_and_timing():
+def test_metrics_snapshot_and_timing(spark):
     from map_reduce_framework_spark.control import metrics
-    from map_reduce_framework_spark.session import get_spark
 
-    spark = get_spark("metrics-test")
     snap = {r["metric"]: r["value"] for r in metrics.snapshot(spark).collect()}
     assert snap["spark_version"].startswith("4.")
     assert int(snap["default_parallelism"]) >= 1

@@ -48,26 +48,13 @@ def _model_replay(ops):
     return sorted(out)
 
 
-_spark = None
-
-
-def _get_spark():
-    global _spark
-    if _spark is None:
-        from map_reduce_framework_spark.session import get_spark
-
-        _spark = get_spark("kv-prop-tests", shuffle_partitions=4)
-    return _spark
-
-
 @settings(
     max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@given(_OPS)
-def test_kv_fold_matches_sequential_model(ops):
-    spark = _get_spark()
+@given(ops=_OPS)
+def test_kv_fold_matches_sequential_model(spark, ops):
     pdf = pd.DataFrame(
         {
             "op_id": range(len(ops)),
@@ -97,12 +84,11 @@ def test_kv_fold_matches_sequential_model(ops):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@given(_OPS)
-def test_kv_fold_segmented_matches_sequential_model(ops):
+@given(ops=_OPS)
+def test_kv_fold_segmented_matches_sequential_model(spark, ops):
     """The bounded-memory segmented fold must replay ANY log exactly:
     segment_size=5 forces multi-round chaining on these 40-op histories,
     exercising the carried-state handoff between rounds."""
-    spark = _get_spark()
     pdf = pd.DataFrame(
         {
             "op_id": range(len(ops)),

@@ -529,26 +529,12 @@ def test_classifier_training_pass_is_one_scan_no_join(spark):
     parallelism repartition and the final scalar-aggregate exchange.
     K iterations = K embarrassingly-parallel passes at 100 TB -- the
     plan gate pins that shape for the per-iteration job."""
-    from pyspark.sql import functions as F
-
     from map_reduce_framework_spark.operators import text_analysis as ta
     from map_reduce_framework_spark.sources.io import load_table
 
     docs = load_table(spark, SF, "documents")
-    feats = ta._qct_features(docs)
-    pq, _z = ta._qct_pq([100, 200, 300, 400, 500, 600])
-    scored = feats.select(
-        "yq", *[f"xq{j}" for j in range(6)], pq.alias("pq")
-    )
-    agg = scored.agg(
-        *[
-            F.sum((F.col("pq") - F.col("yq")) * F.col(f"xq{j}")).alias(
-                f"g{j}"
-            )
-            for j in range(6)
-        ],
-        F.count("*").alias("n"),
-    )
+    w = {ta.QCT_POS_LANG: [100, 200, 300, 400, 500, 600]}
+    agg = ta._logistic_pass(ta._qct_features(docs), [ta.QCT_POS_LANG], w, 5)
     plan = agg._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"

@@ -111,13 +111,19 @@ def test_langid_mixture_plan_weights_shared_libm(spark, sf_smoke):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r9 #3: scratch caches keyed on the parquet fingerprint.
+# ADVICE r9 #3: per-table artifacts keyed on the parquet fingerprint.
 # ---------------------------------------------------------------------------
 
 
-def test_scratch_caches_invalidate_on_regenerated_table(tmp_path, sf_smoke):
+def test_scratch_caches_invalidate_on_regenerated_table(spark, tmp_path, sf_smoke):
+    """sources.io.table_memo serves one value per (sf_dir, documents
+    fingerprint, key): the same table gives the same value without a
+    rebuild, a table regenerated under the same path gets a rebuilt
+    one. Checked on the helper itself, the curation scratch dir and the
+    trained langid trace."""
     from map_reduce_framework_spark import curation
-    from map_reduce_framework_spark.streaming import ops
+    from map_reduce_framework_spark.operators import langid
+    from map_reduce_framework_spark.sources.io import table_memo
 
     sf_dir = str(tmp_path / "sf")
     os.makedirs(sf_dir)
@@ -125,15 +131,34 @@ def test_scratch_caches_invalidate_on_regenerated_table(tmp_path, sf_smoke):
     dst = os.path.join(sf_dir, "documents.parquet")
     shutil.copy(src, dst)
 
-    first_ingest = ops._ingest_scratch(sf_dir)
+    builds = []
+
+    def build():
+        builds.append(object())
+        return builds[-1]
+
+    def failing_build():
+        raise RuntimeError("half-built")
+
+    first = table_memo(sf_dir, "probe", build)
     first_cur = curation.scratch_for(sf_dir)
-    assert ops._ingest_scratch(sf_dir) == first_ingest
+    first_trace = langid._trace_for_table(spark, sf_dir)
+    assert table_memo(sf_dir, "probe", build) is first
+    assert len(builds) == 1
     assert curation.scratch_for(sf_dir) == first_cur
+    assert langid._trace_for_table(spark, sf_dir) is first_trace
+    # a build that raises stores nothing
+    with pytest.raises(RuntimeError):
+        table_memo(sf_dir, "failing", failing_build)
+    assert table_memo(sf_dir, "failing", build) is builds[-1]
 
     # regenerate the table under the SAME path: new bytes, new mtime
     os.utime(dst, ns=(1, 1))
-    assert ops._ingest_scratch(sf_dir) != first_ingest
+    assert table_memo(sf_dir, "probe", build) is not first
     assert curation.scratch_for(sf_dir) != first_cur
+    rebuilt = langid._trace_for_table(spark, sf_dir)
+    assert rebuilt is not first_trace
+    assert rebuilt == first_trace  # same bytes train the same model
 
 
 # ---------------------------------------------------------------------------

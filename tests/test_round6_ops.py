@@ -834,9 +834,10 @@ def test_quality_classifier_training_matches_independent_python(
         ]
         want_trace.append((t, avg_loss, *[w / 1e6 for w in wq]))
 
+    trace = ta.quality_classifier_train_trace(docs)
     got_trace = [
         tuple(r)
-        for r in ta.quality_classifier_train(docs)
+        for r in ta.quality_classifier_train(docs, _trace=trace)
         .orderBy("iter")
         .collect()
     ]
@@ -858,7 +859,9 @@ def test_quality_classifier_training_matches_independent_python(
         want_scores[d] = (yq == S, pq > S // 2)
     got_scores = {
         r.doc_id: (r.label_ref, r.keep)
-        for r in ta.quality_classifier_trained_scores(docs).collect()
+        for r in ta.quality_classifier_trained_scores(
+            docs, _trace=trace
+        ).collect()
     }
     assert got_scores == want_scores
 
@@ -902,7 +905,7 @@ def test_quality_classifier_trainer_learns_planted_signal(spark):
     )
     assert losses[-1] < prior_entropy - 0.05
 
-    scored = ta.quality_classifier_trained_scores(docs, iters=30, lr=8.0)
+    scored = ta.quality_classifier_trained_scores(docs, _trace=(trace, wq))
     got = {r.doc_id: (r.label_ref, r.keep) for r in scored.collect()}
     hits = sum(lab == keep for lab, keep in got.values())
     assert hits / len(got) > 0.9
@@ -921,8 +924,8 @@ def test_quality_classifier_gradient_sum_does_not_overflow(spark, monkeypatch):
     S = ta.DSIR_SCALE
     x = [[10**13, 7, 0, 0, 0, 0], [10**13, 3, 0, 0, 0, 0]]
     feats = spark.createDataFrame(
-        [(d, 0, *xs) for d, xs in enumerate(x)],
-        "doc_id long, yq long, "
+        [(d, "zz", *xs) for d, xs in enumerate(x)],
+        "doc_id long, lang string, "
         + ", ".join(f"xq{j} long" for j in range(6)),
     )
     monkeypatch.setattr(ta, "_qct_features", lambda documents: feats)
@@ -933,6 +936,40 @@ def test_quality_classifier_gradient_sum_does_not_overflow(spark, monkeypatch):
     want = [-math.floor(float(gj) * ta.QCT_LR / (2 * 1e6) + 0.5) for gj in g]
     _rows, w_q = ta.quality_classifier_train_trace(feats, iters=1)
     assert w_q == want
+
+
+def test_quality_classifier_queries_train_once_per_table(spark, tmp_path, sf_smoke):
+    """The registered quality_classifier_train and
+    quality_classifier_trained_scores share one trace per documents
+    table (sources.io.table_memo): once the first has trained, building
+    the second runs no SQL execution at all, where training alone is
+    one collect per iteration."""
+    import shutil
+
+    from map_reduce_framework_spark.operators import text_analysis as ta
+    from map_reduce_framework_spark.registry import REGISTRY
+
+    sf_dir = str(tmp_path)
+    shutil.copy(
+        os.path.join(sf_smoke, "documents.parquet"),
+        os.path.join(sf_dir, "documents.parquet"),
+    )
+
+    def last_execution() -> int:
+        # the newest execution id, not executionsCount(): the store keeps
+        # only the last spark.sql.ui.retainedExecutions (1000), so in a
+        # long session the count stops growing
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        ids = spark._jsparkSession.sharedState().statusStore().executionsList()
+        return ids.last().executionId() if ids.nonEmpty() else -1
+
+    start = last_execution()
+    trained = REGISTRY["quality_classifier_train"].fn(spark, sf_dir)
+    assert last_execution() > start  # the first query trained
+    assert trained.count() == ta.QCT_ITERS
+    before = last_execution()
+    REGISTRY["quality_classifier_trained_scores"].fn(spark, sf_dir)
+    assert last_execution() == before
 
 
 # ---------------------------------------------------------------------------
